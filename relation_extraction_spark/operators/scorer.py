@@ -96,7 +96,7 @@ class RuleScorer:
         # fused-stage hot path, where the two dict lookups per emit add up
         self._resolved = [
             (rx, [(gs, sbj2id[st], pred2id[p], go) for gs, st, p, go in emits], gate)
-            for (rx, emits), gate in zip(rules, gates)
+            for (rx, emits), gate in zip(rules, gates, strict=True)
         ]
 
     def score(self, text: str):
@@ -194,7 +194,6 @@ _GATES = [
     "的票房达到", "荣获第", "中饰演", "的国籍是中国", "成立日期为",
     "演唱的歌曲", "主演",
 ]
-assert len(_GATES) == len(_RULES)
 
 
 class SurrogateScorer(RuleScorer):

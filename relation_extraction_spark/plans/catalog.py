@@ -119,13 +119,10 @@ class Catalog:
         finally:
             out.close()
 
-    def write(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
+    def write(self, name: str, df: DataFrame) -> None:
         nxt = (self._all_versions(name) or [0])[-1] + 1
         self._write_schema_sidecar(name, nxt, df)  # BEFORE the data commit
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self._version_path(name, nxt))
+        df.write.mode("overwrite").parquet(self._version_path(name, nxt))
         # vacuum: keep the new snapshot + KEEP_SNAPSHOTS-1 previous committed.
         # Uncommitted directories are our own crashed leftovers under the
         # single-writer contract; with inflight_grace_seconds > 0 a recently

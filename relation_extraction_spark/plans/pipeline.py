@@ -12,6 +12,16 @@ per-stage decode stats (predicate diversity for the triples stage) —
 so a rerun resumes from the last committed stage — at 10^12-document scale
 that is the difference between losing a day and losing one stage.
 
+Every table commits flat — no hive ``key=`` partition directories. Nothing
+reads a stage back by a partition value, so a directory layout would only
+add files and write/list time; lineage rows are per read-back partition
+for every stage alike.
+
+The KG stages (edges, vertices, corrected, canonical_edges) are set up once,
+in ``_kg_stages``, for both ``run`` and ``run_incremental``. The canonical
+stage resolves its alias graph in a single task (operators/linking.py), so
+its Spark job count does not depend on the shape of the alias graph.
+
 Lineage rows are computed AFTER the commit from the committed table itself,
 reading only the key column (parquet column pruning — the scan touches one
 string column of the just-written files, not the stage's input or payload
@@ -78,44 +88,71 @@ class KGPipeline:
         self.signature_stop_max_df = signature_stop_max_df
         self.stage_seconds: dict[str, float] = {}
 
-    N_BUCKETS = 64
-
     def _checkpoint(self, name: str, df: DataFrame, key: str = "url",
-                    bucket_by: str | None = None,
                     stat_cols: tuple[str, ...] = ()) -> DataFrame:
-        if bucket_by is not None:
-            # hash-bucketed layout: joins/groupBys on the bucket key read
-            # co-located files and prune by bucket (poor man's Iceberg
-            # bucket partitioning; swap for bucketed writeTo with real Iceberg)
-            df = df.withColumn(
-                "bucket", F.pmod(F.crc32(F.col(bucket_by)), F.lit(self.N_BUCKETS))
-            ).repartition("bucket")
-            self.catalog.write(name, df, partition_by=["bucket"])
-        else:
-            self.catalog.write(name, df)
+        self.catalog.write(name, df)
         out = self.catalog.read(name)
         if key in out.columns:
             self.catalog.write(
                 f"lineage_{name}",
                 lineage_rows(out, name, key,
                              tuple(c for c in stat_cols if c in out.columns)))
-        # 'bucket' is a physical-layout artifact (partition pruning already
-        # happened at write time) — callers get the logical schema back
-        return out.drop("bucket") if bucket_by is not None else out
+        return out
 
     def _stage(self, name: str, compute, resume: bool, key: str = "url",
-               bucket_by: str | None = None,
                stat_cols: tuple[str, ...] = ()) -> DataFrame:
         import time
 
         if resume and self.catalog.exists(name):
-            self.stage_seconds[name] = 0.0
             out = self.catalog.read(name)
-            return out.drop("bucket") if bucket_by is not None else out
+            if "bucket" in out.columns:
+                # edges/canonical_edges committed as hive bucket= directories
+                # by the retired layout: serving them would leak the column
+                raise ValueError(
+                    f"stage {name!r} was committed with the retired 'bucket' "
+                    "layout column; rebuild with resume=False.")
+            self.stage_seconds[name] = 0.0
+            return out
         t0 = time.time()
-        out = self._checkpoint(name, compute(), key, bucket_by, stat_cols)
+        out = self._checkpoint(name, compute(), key, stat_cols)
         self.stage_seconds[name] = round(time.time() - t0, 2)
         return out
+
+    def _kg_stages(self, out: dict[str, DataFrame], resume: bool) -> None:
+        """edges → vertices → corrected → canonical_edges over the committed
+        ``out["triples"]`` and ``out["documents"]``; shared by ``run`` and
+        ``run_incremental``."""
+        out["edges"] = self._stage(
+            "edges", lambda: kg_edges(out["triples"]), resume, key="subject")
+        out["vertices"] = self._stage(
+            "vertices", lambda: kg_vertices(out["triples"]), resume, key="entity")
+
+        def corrected():
+            t = out["triples"].join(
+                out["documents"].select("url", "text"), "url", "left")
+            return kg_correct(t, out["edges"], out["vertices"])
+
+        out["corrected"] = self._stage("corrected", corrected, resume)
+
+        def canonical():
+            # edges (kg_edges dedup + self_check joins over ALL triples) and
+            # entities feed several consumers (candidate generation, the
+            # mapping join, edge rewrite); materialize each once — they are
+            # orders of magnitude smaller than the triple table — instead of
+            # re-running the dedup per consumer. kg_edges is checkpointed
+            # BEFORE self_check: self_check scans its edges input twice
+            # (conflict-pair groupBy + final anti-join)
+            raw_edges = kg_edges(out["corrected"]).localCheckpoint(eager=True)
+            edges = self_check(raw_edges, out["vertices"]) \
+                .localCheckpoint(eager=True)
+            entities = edges.select(F.col("subject").alias("entity")).union(
+                edges.select("object")).dropDuplicates().localCheckpoint(eager=True)
+            mapping = canonical_mapping(
+                entities, signature_stop_max_df=self.signature_stop_max_df)
+            return canonicalize_edges(edges, mapping)
+
+        out["canonical_edges"] = self._stage(
+            "canonical_edges", canonical, resume, key="subject")
 
     def run(self, documents: DataFrame, resume: bool = True,
             curate: bool = False,
@@ -210,40 +247,7 @@ class KGPipeline:
         out["triples"] = self._stage(
             "triples", lambda: extract_triples(extract_input, scorer=self.scorer),
             resume, stat_cols=("predicate",))
-        out["edges"] = self._stage(
-            "edges", lambda: kg_edges(out["triples"]), resume, key="subject",
-            bucket_by="subject")
-        out["vertices"] = self._stage(
-            "vertices", lambda: kg_vertices(out["triples"]), resume, key="entity")
-
-        def corrected():
-            t = out["triples"].join(
-                out["documents"].select("url", "text"), "url", "left")
-            return kg_correct(t, out["edges"], out["vertices"])
-
-        out["corrected"] = self._stage("corrected", corrected, resume)
-
-        def canonical():
-            # edges (kg_edges dedup + self_check joins over ALL triples) and
-            # entities feed FOUR downstream consumers (candidate generation,
-            # CC entry, the mapping join, edge rewrite); materialize each
-            # once — they are orders of magnitude smaller than the triple
-            # table — instead of re-running the 1M-row dedup per consumer
-            # kg_edges is checkpointed BEFORE self_check: self_check scans
-            # its edges input twice (conflict-pair groupBy + final
-            # anti-join), which would re-run the million-row dedup per scan
-            raw_edges = kg_edges(out["corrected"]).localCheckpoint(eager=True)
-            edges = self_check(raw_edges, out["vertices"]) \
-                .localCheckpoint(eager=True)
-            entities = edges.select(F.col("subject").alias("entity")).union(
-                edges.select("object")).dropDuplicates().localCheckpoint(eager=True)
-            mapping = canonical_mapping(
-                entities, signature_stop_max_df=self.signature_stop_max_df)
-            return canonicalize_edges(edges, mapping)
-
-        out["canonical_edges"] = self._stage(
-            "canonical_edges", canonical, resume, key="subject",
-            bucket_by="subject")
+        self._kg_stages(out, resume)
         # the incremental cut (see run_incremental): these urls now have
         # documents AND triples committed
         self.catalog.write(
@@ -305,29 +309,5 @@ class KGPipeline:
         # KG stages recompute over the merged triple table (entity-set
         # sized); resume=False because their committed versions describe
         # the pre-increment corpus
-        out["edges"] = self._stage(
-            "edges", lambda: kg_edges(out["triples"]), False, key="subject",
-            bucket_by="subject")
-        out["vertices"] = self._stage(
-            "vertices", lambda: kg_vertices(out["triples"]), False, key="entity")
-
-        def corrected():
-            t = out["triples"].join(
-                out["documents"].select("url", "text"), "url", "left")
-            return kg_correct(t, out["edges"], out["vertices"])
-
-        out["corrected"] = self._stage("corrected", corrected, False)
-
-        def canonical():
-            raw_edges = kg_edges(out["corrected"]).localCheckpoint(eager=True)
-            edges = self_check(raw_edges, out["vertices"]) \
-                .localCheckpoint(eager=True)
-            entities = edges.select(F.col("subject").alias("entity")).union(
-                edges.select("object")).dropDuplicates().localCheckpoint(eager=True)
-            return canonicalize_edges(edges, canonical_mapping(
-                entities, signature_stop_max_df=self.signature_stop_max_df))
-
-        out["canonical_edges"] = self._stage(
-            "canonical_edges", canonical, False, key="subject",
-            bucket_by="subject")
+        self._kg_stages(out, False)
         return out

@@ -244,3 +244,14 @@ def test_rule_gates_result_identical():
     for i in range(400):
         t = gen_row(i)["text"]
         assert gated.score(t) == ungated.score(t)
+
+
+def test_rule_gates_length_mismatch_raises():
+    """Gates pair with rules positionally; a missing gate must raise (also
+    under ``python -O``), not silently drop the trailing rules."""
+    from relation_extraction_spark.operators.scorer import (
+        _RULES, SBJ2ID, RuleScorer)
+    from relation_extraction_spark.schema import PRED2ID
+
+    with pytest.raises(ValueError):
+        RuleScorer(_RULES, SBJ2ID, PRED2ID, gates=[None] * (len(_RULES) - 1))

@@ -111,11 +111,46 @@ def test_signature_stop_purge_is_join_not_literal(spark):
 
 
 def test_connected_components_chain(spark):
+    import random
+
     # a-b, b-c, d-e: two components
     pairs = spark.createDataFrame([("a", "b"), ("b", "c"), ("d", "e")], "a string, b string")
     comp = {r["entity"]: r["component"] for r in connected_components(pairs).collect()}
     assert comp["a"] == comp["b"] == comp["c"] == "a"
     assert comp["d"] == comp["e"] == "d"
+    # a 64-node path whose names are permuted along it (labels are not
+    # monotone, so hooking takes several outer rounds), edges shuffled and
+    # spread over partitions: it resolves to one component named c000
+    rng = random.Random(5)
+    perm = rng.sample(range(64), 64)
+    chain = [(f"c{perm[i]:03d}", f"c{perm[i + 1]:03d}") for i in range(63)]
+    rng.shuffle(chain)
+    df = spark.createDataFrame(chain, "a string, b string").repartition(4)
+    comp = {r["entity"]: r["component"] for r in connected_components(df).collect()}
+    assert len(comp) == 64
+    assert set(comp.values()) == {"c000"}
+    # zero alias pairs: the resolver's single partition holds no batch
+    empty = spark.createDataFrame([], "a string, b string")
+    assert connected_components(empty).collect() == []
+
+
+def test_connected_components_order_matches_spark_min(spark):
+    """The component is the smallest member in Spark's UTF-8 binary order:
+    mixed ASCII, CJK and astral-plane names (where UTF-16 order would
+    differ) must name each component exactly as ``F.min`` does."""
+    pairs = [("Zed", "张三"), ("张三", "\U00020000甲"), ("\uff21lpha", "\U0001f600"),
+             ("\U0001f600", "abc"), ("\ufb01x", "\U00010400y"), ("b", "B")]
+    df = spark.createDataFrame(pairs, "a string, b string")
+    comp = connected_components(df)
+    spark_min = (comp.groupBy("component").agg(F.min("entity").alias("m"))
+                 .where(F.col("m") != F.col("component")))
+    assert spark_min.count() == 0
+    got = {r["entity"]: r["component"] for r in comp.collect()}
+    assert got["\U00020000甲"] == got["张三"] == "Zed"
+    assert got["abc"] == got["\U0001f600"] == "abc"
+    # U+FB01 sorts below U+10400 in code points; UTF-16 would invert them
+    assert got["\U00010400y"] == "\ufb01x"
+    assert got["b"] == "B"
 
 
 def test_canonical_mapping_singletons(spark, names):
@@ -144,21 +179,24 @@ def test_partition_invariance(spark, names):
 
 
 def test_star_cc_matches_min_label(spark):
-    """large-star/small-star CC equals min-label propagation on random graphs."""
+    """large-star/small-star CC equals the one-task resolver on random
+    graphs."""
     import random
 
     from relation_extraction_spark.operators.linking import connected_components_star
 
-    rng = random.Random(3)
-    nodes = [f"n{i:02d}" for i in range(40)]
-    pairs = set()
-    for _ in range(35):
-        a, b = rng.sample(nodes, 2)
-        pairs.add((min(a, b), max(a, b)))
-    df = spark.createDataFrame(sorted(pairs), "a string, b string")
-    lbl = {r["entity"]: r["component"] for r in connected_components(df).collect()}
-    star = {r["entity"]: r["component"] for r in connected_components_star(df).collect()}
-    assert lbl == star
+    for seed, n_pairs in ((3, 35), (4, 60)):
+        rng = random.Random(seed)
+        nodes = [f"n{i:02d}" for i in range(40)]
+        pairs = set()
+        for _ in range(n_pairs):
+            a, b = rng.sample(nodes, 2)
+            pairs.add((min(a, b), max(a, b)))
+        df = spark.createDataFrame(sorted(pairs), "a string, b string")
+        lbl = {r["entity"]: r["component"] for r in connected_components(df).collect()}
+        star = {r["entity"]: r["component"]
+                for r in connected_components_star(df).collect()}
+        assert lbl == star
 
 
 def test_star_cc_long_chain(spark):
@@ -181,7 +219,9 @@ def test_star_cc_long_chain(spark):
 def test_canonicalization_soak_harness_smoke(spark):
     """The 10×-graph-order soak harness (scripts/soak_canonicalization.py)
     must keep producing the BENCH/PLANS.md metrics: perfect family
-    precision, near-perfect recall, rounds reported, both stop-cap modes."""
+    precision, near-perfect recall, resolver = star with the star's rounds,
+    the resolver's memory where /proc allows measuring it, and the star
+    depth probe's rounds."""
     import importlib.util
     import os
 
@@ -195,7 +235,12 @@ def test_canonicalization_soak_harness_smoke(spark):
     assert out["n_entities"] == 800 and out["true_pairs"] == 1200
     assert out["pair_precision"] == 1.0
     assert out["pair_recall"] >= 0.95
+    assert out["cc_mismatch"] == 0
     assert out["cc_rounds"] >= 1
+    if out["resolver_base_rss_mb"] is not None:
+        assert out["resolver_peak_rss_mb"] >= out["resolver_base_rss_mb"] > 0
+    cc = soak.cc_level(spark, 50)
+    assert cc["n_verified"] == 250 and cc["cc_mismatch"] == 0
     probe = soak.chain_probe(spark, n_chains=20, length=32)
     assert probe["components_found"] == 20
     assert 1 <= probe["cc_rounds"] <= 10

@@ -26,6 +26,44 @@ def test_pipeline_all_stages(spark, run_dir):
         assert lin.where("row_count > 0").count() > 0
 
 
+def test_kg_tables_commit_flat_and_match_star_reference(spark, run_dir):
+    """edges and canonical_edges commit flat (no ``bucket`` layout column),
+    and canonical_edges equals the edge rewrite through a mapping built
+    with the distributed star CC — a reference independent of the one-task
+    resolver the pipeline ships."""
+    import pyspark.sql.functions as F
+
+    from relation_extraction_spark.operators.kg import kg_edges, self_check
+    from relation_extraction_spark.operators.linking import (
+        canonicalize_edges, connected_components_star, lsh_candidate_pairs,
+        verified_alias_pairs)
+
+    cat = KGPipeline(spark, run_dir).catalog
+    for table in ("edges", "canonical_edges"):
+        assert "bucket" not in cat.read(table).columns, table
+    edges = self_check(kg_edges(cat.read("corrected")), cat.read("vertices"))
+    entities = edges.select(F.col("subject").alias("entity")).union(
+        edges.select("object")).dropDuplicates()
+    aliases = verified_alias_pairs(lsh_candidate_pairs(entities))
+    assert aliases.count() > 0  # the comparison must exercise some merge
+    comp = connected_components_star(aliases)
+    mapping = entities.join(comp, "entity", "left").select(
+        "entity", F.coalesce("component", F.col("entity")).alias("canonical"))
+    want = sorted(map(tuple, canonicalize_edges(edges, mapping).collect()))
+    got = sorted(map(tuple, cat.read("canonical_edges").collect()))
+    assert got == want
+
+
+def test_resume_refuses_retired_bucket_layout(spark, tmp_path):
+    """A stage committed by the retired hash-bucket layout still carries its
+    ``bucket`` column; resuming over it must raise, not serve the column."""
+    pipe = KGPipeline(spark, str(tmp_path))
+    pipe.catalog.write("edges", spark.createDataFrame(
+        [("s", "p", "o", 3)], "subject string, predicate string, object string, bucket int"))
+    with pytest.raises(ValueError, match="resume=False"):
+        pipe._stage("edges", lambda: None, True, key="subject")
+
+
 def test_pipeline_resume_skips_committed(spark, run_dir):
     """Drop a late stage; rerun must reuse earlier checkpoints and only
     recompute from the dropped stage onward."""
