@@ -29,11 +29,35 @@ columns), grouped by spark_partition_id of the read-back split. This is one
 cheap extra pass by design: lineage must describe what was COMMITTED, and a
 same-job accumulator would record pre-commit state that a partially-retried
 write could contradict.
+
+Independent work overlaps on a thread pool that ``run`` and
+``run_incremental`` each own for one call (``POOL_WORKERS`` threads):
+
+* **lineage in the background** — a stage commits and reads itself back on
+  the caller's thread; building and committing ``lineage_<stage>`` runs on
+  the pool, since no later stage reads it;
+* **edges ∥ vertices** — both read only the committed ``triples``, so they
+  run together and ``corrected`` waits for both.
+
+Pool tasks carry the caller's Spark local properties (job group,
+description, scheduler pool; ``inheritable_thread_target``), so a caller's
+``cancelJobGroup`` reaches them. Every pending task is joined, and its
+failure re-raised, before the ``processed_urls`` cut is committed: the cut
+exists ⟹ every stage before it and that stage's lineage are committed.
+Each table still has one writer, as ``Catalog`` requires. A stage that
+recomputes drops its lineage table first, and a resumed stage whose lineage
+is missing (a crash between the two commits) gets it rebuilt from the
+committed table, so lineage never describes a different snapshot.
 """
 
 from __future__ import annotations
 
+import contextlib
+import time
+from concurrent.futures import Future, ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..operators.extract_triples import extract_text_df, extract_triples
 from ..operators.kg import kg_correct, kg_edges, kg_vertices, self_check
@@ -76,6 +100,10 @@ class KGPipeline:
     """Run stages with checkpoint/resume against a Catalog."""
 
     STAGES = ("documents", "triples", "edges", "vertices", "corrected", "canonical_edges")
+    # no task waits for a thread: a call has at most seven in flight (one
+    # lineage commit per stage, or edges and vertices plus the lineage
+    # commits submitted before and by them)
+    POOL_WORKERS = 8
 
     def __init__(self, spark: SparkSession, catalog_root: str, scorer=None,
                  signature_stop_max_df: int | None = None):
@@ -86,23 +114,59 @@ class KGPipeline:
         # shingles in the LSH signatures (see linking.lsh_candidate_pairs) —
         # set on corpora whose entity names share honorific/suffix grams
         self.signature_stop_max_df = signature_stop_max_df
+        # wall seconds from a stage's start to its committed read-back; its
+        # lineage commit runs in the background and is not counted. 0.0 for
+        # a stage served from the catalog on resume
         self.stage_seconds: dict[str, float] = {}
+        self._pool: ThreadPoolExecutor | None = None
+        # background lineage commits; pool threads append too (an atomic
+        # list.append), only _join on the calling thread pops
+        self._pending: list[Future] = []
 
-    def _checkpoint(self, name: str, df: DataFrame, key: str = "url",
-                    stat_cols: tuple[str, ...] = ()) -> DataFrame:
-        self.catalog.write(name, df)
-        out = self.catalog.read(name)
-        if key in out.columns:
-            self.catalog.write(
-                f"lineage_{name}",
-                lineage_rows(out, name, key,
-                             tuple(c for c in stat_cols if c in out.columns)))
-        return out
+    @contextlib.contextmanager
+    def _background(self):
+        """The thread pool of one ``run``/``run_incremental`` call. On exit
+        every background task has finished; a normal exit re-raises the
+        first failure among them."""
+        self._pool = ThreadPoolExecutor(self.POOL_WORKERS,
+                                        thread_name_prefix="kg-pipeline")
+        try:
+            yield
+            self._join()
+        finally:
+            self._pool.shutdown(wait=True)
+            self._pool, self._pending = None, []
+
+    def _submit(self, fn, *args) -> Future:
+        # the wrapper captures the caller's local properties and job tags
+        # NOW, on the submitting thread, and sets them on the pool thread.
+        # Without pinned threads (PYSPARK_PIN_THREAD=false) Python threads
+        # own no JVM thread and pyspark hands back the session unchanged
+        wrap = inheritable_thread_target(self.spark)
+        return self._pool.submit(fn if wrap is self.spark else wrap(fn), *args)
+
+    def _join(self) -> None:
+        """Wait for every pending lineage commit (including ones submitted
+        while waiting); re-raise the first failure."""
+        first = None
+        while self._pending:
+            exc = self._pending.pop(0).exception()
+            first = first or exc
+        if first is not None:
+            raise first
+
+    def _lineage(self, name: str, out: DataFrame, key: str,
+                 stat_cols: tuple[str, ...]) -> None:
+        """Build and commit ``lineage_<name>`` from the committed ``out`` on
+        the pool; ``_join`` waits for it."""
+        def commit():
+            if key in out.columns:
+                self.catalog.write(f"lineage_{name}", lineage_rows(
+                    out, name, key, tuple(c for c in stat_cols if c in out.columns)))
+        self._pending.append(self._submit(commit))
 
     def _stage(self, name: str, compute, resume: bool, key: str = "url",
                stat_cols: tuple[str, ...] = ()) -> DataFrame:
-        import time
-
         if resume and self.catalog.exists(name):
             out = self.catalog.read(name)
             if "bucket" in out.columns:
@@ -111,21 +175,30 @@ class KGPipeline:
                 raise ValueError(
                     f"stage {name!r} was committed with the retired 'bucket' "
                     "layout column; rebuild with resume=False.")
+            if not self.catalog.exists(f"lineage_{name}"):
+                # the run that committed the stage died before its lineage
+                self._lineage(name, out, key, stat_cols)
             self.stage_seconds[name] = 0.0
             return out
         t0 = time.time()
-        out = self._checkpoint(name, compute(), key, stat_cols)
+        # the old lineage describes the snapshot about to be replaced; a
+        # crash before the new one commits must leave none, not a stale one
+        self.catalog.drop(f"lineage_{name}")
+        self.catalog.write(name, compute())
+        out = self.catalog.read(name)
         self.stage_seconds[name] = round(time.time() - t0, 2)
+        self._lineage(name, out, key, stat_cols)
         return out
 
     def _kg_stages(self, out: dict[str, DataFrame], resume: bool) -> None:
-        """edges → vertices → corrected → canonical_edges over the committed
+        """edges ∥ vertices → corrected → canonical_edges over the committed
         ``out["triples"]`` and ``out["documents"]``; shared by ``run`` and
         ``run_incremental``."""
-        out["edges"] = self._stage(
-            "edges", lambda: kg_edges(out["triples"]), resume, key="subject")
-        out["vertices"] = self._stage(
-            "vertices", lambda: kg_vertices(out["triples"]), resume, key="entity")
+        edges = self._submit(self._stage, "edges",
+                             lambda: kg_edges(out["triples"]), resume, "subject")
+        vertices = self._submit(self._stage, "vertices",
+                                lambda: kg_vertices(out["triples"]), resume, "entity")
+        out["edges"], out["vertices"] = edges.result(), vertices.result()
 
         def corrected():
             t = out["triples"].join(
@@ -213,45 +286,47 @@ class KGPipeline:
             if not curate and self.catalog.exists("curate_opts"):
                 self.catalog.drop("curate_opts")
         out: dict[str, DataFrame] = {}
-        out["documents"] = self._stage(
-            "documents", lambda: extract_text_df(documents), resume)
-        extract_input = out["documents"]
-        if curate:
-            from ..operators.curation import curate_docs
+        with self._background():
+            out["documents"] = self._stage(
+                "documents", lambda: extract_text_df(documents), resume)
+            extract_input = out["documents"]
+            if curate:
+                from ..operators.curation import curate_docs
 
-            def curated():
-                kept = curate_docs(out["documents"], id_col="url",
-                                   **(curate_opts or {}))
-                # restore the columns extraction consumes (lang); curated
-                # text replaces the raw text
-                return out["documents"].select("url", "lang").join(kept, "url")
+                def curated():
+                    kept = curate_docs(out["documents"], id_col="url",
+                                       **(curate_opts or {}))
+                    # restore the columns extraction consumes (lang); curated
+                    # text replaces the raw text
+                    return out["documents"].select("url", "lang").join(kept, "url")
 
-            if not (resume and self.catalog.exists("curated")):
-                # the stage is about to (re)compute: drop any STALE committed
-                # curated table FIRST, then commit the opts sidecar, then
-                # recompute. Ordering matters for crash safety — with the old
-                # "sidecar first, keep stale table" order, a crash after the
-                # sidecar write but before the curated commit left
-                # sidecar=new-opts + curated=old-data, and a later
-                # resume=True run with the new opts passed the opts guard
-                # and silently served the stale curated triples. With the
-                # drop up front, every crash window leaves the catalog
-                # either without a curated table (→ recompute on resume) or
-                # with a freshly-committed table matching the sidecar.
-                if self.catalog.exists("curated"):
-                    self.catalog.drop("curated")
-                self.catalog.write("curate_opts", self.spark.createDataFrame(
-                    [(opts_json,)], "opts string"))
-            out["curated"] = self._stage("curated", curated, resume)
-            extract_input = out["curated"]
-        out["triples"] = self._stage(
-            "triples", lambda: extract_triples(extract_input, scorer=self.scorer),
-            resume, stat_cols=("predicate",))
-        self._kg_stages(out, resume)
-        # the incremental cut (see run_incremental): these urls now have
-        # documents AND triples committed
-        self.catalog.write(
-            "processed_urls", out["documents"].select("url").dropDuplicates())
+                if not (resume and self.catalog.exists("curated")):
+                    # the stage is about to (re)compute: drop any STALE committed
+                    # curated table FIRST, then commit the opts sidecar, then
+                    # recompute. Ordering matters for crash safety — with the old
+                    # "sidecar first, keep stale table" order, a crash after the
+                    # sidecar write but before the curated commit left
+                    # sidecar=new-opts + curated=old-data, and a later
+                    # resume=True run with the new opts passed the opts guard
+                    # and silently served the stale curated triples. With the
+                    # drop up front, every crash window leaves the catalog
+                    # either without a curated table (→ recompute on resume) or
+                    # with a freshly-committed table matching the sidecar.
+                    if self.catalog.exists("curated"):
+                        self.catalog.drop("curated")
+                    self.catalog.write("curate_opts", self.spark.createDataFrame(
+                        [(opts_json,)], "opts string"))
+                out["curated"] = self._stage("curated", curated, resume)
+                extract_input = out["curated"]
+            out["triples"] = self._stage(
+                "triples", lambda: extract_triples(extract_input, scorer=self.scorer),
+                resume, stat_cols=("predicate",))
+            self._kg_stages(out, resume)
+            # the incremental cut (see run_incremental): these urls now have
+            # every stage and its lineage committed
+            self._join()
+            self.catalog.write(
+                "processed_urls", out["documents"].select("url").dropDuplicates())
         return out
 
     def run_incremental(self, new_documents: DataFrame) -> dict[str, DataFrame]:
@@ -264,9 +339,9 @@ class KGPipeline:
         touches only the increment.
 
         Crash safety via a CONSISTENT CUT: ``processed_urls`` is committed
-        only AFTER both the merged documents and triples land. A retry
-        after a crash anywhere mid-increment semi-joins the tables back to
-        the cut (dropping any partial increment rows) and redoes the
+        only AFTER the merged documents and triples and their lineage land.
+        A retry after a crash anywhere mid-increment semi-joins the tables
+        back to the cut (dropping any partial increment rows) and redoes the
         increment from scratch — no triples are ever silently lost and
         none are duplicated. A crash after the cut advances leaves only
         the KG stages stale, and any later run_incremental (even a no-op
@@ -279,6 +354,7 @@ class KGPipeline:
                 "increment would bypass the committed curation stage. Re-run "
                 "the full pipeline with curate=True on the merged corpus.")
         if not self.catalog.exists("documents"):
+            # before this call opens its pool: run() opens its own
             return self.run(new_documents, resume=False)
         if not self.catalog.exists("triples") \
                 or not self.catalog.exists("processed_urls"):
@@ -297,17 +373,20 @@ class KGPipeline:
         docs_inc = extract_text_df(fresh).localCheckpoint(eager=True)
         triples_inc = extract_triples(docs_inc, scorer=self.scorer)
         out: dict[str, DataFrame] = {}
-        out["documents"] = self._stage(
-            "documents", lambda: prev_docs.unionByName(docs_inc), False)
-        out["triples"] = self._stage(
-            "triples", lambda: prev_triples.unionByName(triples_inc), False,
-            stat_cols=("predicate",))
-        # advance the cut ONLY now that both commits exist
-        self.catalog.write(
-            "processed_urls",
-            processed.unionByName(docs_inc.select("url")).dropDuplicates())
-        # KG stages recompute over the merged triple table (entity-set
-        # sized); resume=False because their committed versions describe
-        # the pre-increment corpus
-        self._kg_stages(out, False)
+        with self._background():
+            out["documents"] = self._stage(
+                "documents", lambda: prev_docs.unionByName(docs_inc), False)
+            out["triples"] = self._stage(
+                "triples", lambda: prev_triples.unionByName(triples_inc), False,
+                stat_cols=("predicate",))
+            # advance the cut ONLY now that both commits and their lineage
+            # exist
+            self._join()
+            self.catalog.write(
+                "processed_urls",
+                processed.unionByName(docs_inc.select("url")).dropDuplicates())
+            # KG stages recompute over the merged triple table (entity-set
+            # sized); resume=False because their committed versions describe
+            # the pre-increment corpus
+            self._kg_stages(out, False)
         return out

@@ -101,6 +101,78 @@ def test_lineage_decode_stats(spark, run_dir):
         assert 0 < r["n_distinct_keys"] <= r["row_count"]
 
 
+def test_resume_backfills_missing_lineage(spark, run_dir):
+    """A crash between a stage commit and its background lineage commit
+    leaves the stage without lineage: resume rebuilds it from the committed
+    table instead of serving the stage without it forever."""
+    pipe = KGPipeline(spark, run_dir)
+    pipe.catalog.drop("lineage_triples")
+    pipe.run(documents_df(spark, 10), resume=True)  # poison: nothing recomputes
+    assert set(pipe.stage_seconds.values()) == {0.0}
+    lin = pipe.catalog.read("lineage_triples").collect()
+    assert sum(r["row_count"] for r in lin) == pipe.catalog.read("triples").count()
+
+
+def test_failed_lineage_commit_blocks_cut(spark, tmp_path, monkeypatch):
+    """A lineage commit that fails on the pool (here lineage_edges, whose
+    stage itself runs on the pool) fails the run before the processed_urls
+    cut; the rebuild leaves no stale lineage of the replaced snapshot, and
+    resume backfills it."""
+    from relation_extraction_spark.plans.catalog import Catalog
+
+    docs = documents_df(spark, 40)
+    pipe = KGPipeline(spark, str(tmp_path))
+    pipe.run(docs, resume=False)
+    write = Catalog.write
+
+    def failing_write(self, name, df):
+        if name == "lineage_edges":
+            raise RuntimeError("lineage_edges commit failed")
+        write(self, name, df)
+
+    monkeypatch.setattr(Catalog, "write", failing_write)
+    with pytest.raises(RuntimeError, match="lineage_edges"):
+        pipe.run(docs, resume=False)
+    assert not pipe.catalog.exists("processed_urls")
+    assert pipe.catalog.exists("edges") and not pipe.catalog.exists("lineage_edges")
+    monkeypatch.undo()
+    pipe.run(docs, resume=True)
+    assert set(pipe.stage_seconds.values()) == {0.0}
+    lin = pipe.catalog.read("lineage_edges").collect()
+    assert sum(r["row_count"] for r in lin) == pipe.catalog.read("edges").count()
+    assert pipe.catalog.exists("processed_urls")
+
+
+def test_pool_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """Every Spark job a run starts, on the pool included, carries the
+    caller's job group, so ``cancelJobGroup`` reaches all of them."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker_job(group: str) -> int:
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        for _ in range(200):  # the status store is fed asynchronously
+            ids = tracker.getJobIdsForGroup(group)
+            if ids:
+                return max(ids)
+            time.sleep(0.05)
+        raise AssertionError(f"marker job of {group} never reported")
+
+    try:
+        before = marker_job("pipeline-test-before")
+        sc.setJobGroup("pipeline-test-run", "pipeline run")
+        KGPipeline(spark, str(tmp_path)).run(documents_df(spark, 30), resume=False)
+        after = marker_job("pipeline-test-after")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    started = set(range(before + 1, after))
+    assert started and started <= set(tracker.getJobIdsForGroup("pipeline-test-run"))
+
+
 def test_pipeline_with_curation_stage(spark, tmp_path):
     """curate=True commits a curation stage between text and triple
     extraction; permissive thresholds for the CJK corpus (the default
