@@ -7,6 +7,12 @@ Pipeline:
    entities sharing an LSH band bucket.
 2. **Verification**: n-gram Jaccard >= threshold OR containment (one name a
    substring of the other, the reference's fix_spo gate, utils/kg.py:308-309).
+   It runs after the candidate dedup, on per-name features: each distinct
+   name's shingle array and alias gate are built once and joined to both
+   ends of every candidate pair, so a pair pays only codegen'd array and
+   string work. The join is load-bearing: a filter on the pair alone is
+   pushed by Catalyst below the dedup into the blocking self-join, where
+   the interpreted shingle lambdas ran for every shared block of a pair.
 3. **Connected components** in ONE task: the verified alias pairs are
    shuffled into a single partition and a ``mapInArrow`` kernel resolves
    them with vectorized min-label hooking plus pointer jumping until nothing
@@ -198,31 +204,47 @@ def lsh_candidate_pairs(
 
 def verified_alias_pairs(
     candidates: DataFrame,
+    names: DataFrame,
+    name_col: str = "entity",
     jaccard_threshold: float = 0.7,
     shingle_n: int = 2,
     containment: bool = True,
 ) -> DataFrame:
-    """Keep pairs with n-gram Jaccard >= threshold, or substring containment
-    under the reference's fix_spo gates (canonical side len > 1; alias side
-    len > 4, contains CJK, no '·' — utils/kg.py:308-309, 321-322), which stop
-    short names from chaining whole entity families together."""
-    sh = lambda c: _shingles_expr(c, shingle_n)  # noqa: E731
-    j = (
-        F.size(F.array_intersect(sh("a"), sh("b")))
-        / F.size(F.array_union(sh("a"), sh("b")))
-    )
-    cond = j >= jaccard_threshold
+    """Keep candidate pairs (a, b) with n-gram Jaccard >= threshold, or
+    substring containment under the reference's fix_spo gates (canonical
+    side len > 1; alias side len > 4, contains CJK, no '·' — utils/kg.py:
+    308-309, 321-322), which stop short names from chaining whole entity
+    families together.
+
+    ``names`` is the table the candidates were blocked from (its
+    ``name_col``; duplicate rows are fine). Each distinct name's shingle
+    array and alias gate are computed once there and joined to both ends of
+    the candidates, so a pair only pays codegen'd work:
+    ``size(array_intersect)/size(array_union)`` and ``contains``. The join
+    is what keeps it that way: a filter over the pair alone is pushed by
+    Catalyst below ``lsh_candidate_pairs``'s dedup into the blocking
+    self-join, where the interpreted shingle lambdas were rebuilt four
+    times for every joined row, once per block a pair shares. Candidates
+    whose names are not in ``names`` are dropped."""
+    n = F.col(name_col)
+    feats = names.select(n).dropDuplicates().select(
+        n, _shingles_expr(name_col, shingle_n).alias("sh"),
+        ((F.length(n) > 4) & ~n.contains("·")
+         & n.rlike("[\\u4e00-\\u9fa5]")).alias("alias_ok"))
+    side = lambda c: feats.select(  # noqa: E731
+        n.alias(c), F.col("sh").alias(f"sh_{c}"), F.col("alias_ok").alias(f"ok_{c}"))
+    pairs = candidates.join(side("a"), "a").join(side("b"), "b")
+    cond = (
+        F.size(F.array_intersect("sh_a", "sh_b"))
+        / F.size(F.array_union("sh_a", "sh_b"))
+    ) >= jaccard_threshold
     if containment:
-        alias_ok = lambda c: (  # noqa: E731
-            (F.length(c) > 4) & (~F.col(c).contains("·"))
-            & F.col(c).rlike("[\\u4e00-\\u9fa5]")
+        a, b = F.col("a"), F.col("b")
+        cond = cond | (
+            ((F.length(a) > 1) & b.contains(a) & F.col("ok_b"))
+            | ((F.length(b) > 1) & a.contains(b) & F.col("ok_a"))
         )
-        contain = (
-            ((F.length("a") > 1) & F.col("b").contains(F.col("a")) & alias_ok("b"))
-            | ((F.length("b") > 1) & F.col("a").contains(F.col("b")) & alias_ok("a"))
-        )
-        cond = cond | contain
-    return candidates.where(cond)
+    return pairs.where(cond).select(*candidates.columns)
 
 
 def _resolve_components(batches):
@@ -295,7 +317,8 @@ def canonical_mapping(
     corpus-wide decoration grams."""
     cands = lsh_candidate_pairs(entities, name_col, num_hashes, bands,
                                 signature_stop_max_df=signature_stop_max_df)
-    aliases = verified_alias_pairs(cands, jaccard_threshold)
+    aliases = verified_alias_pairs(cands, entities, name_col,
+                                   jaccard_threshold=jaccard_threshold)
     comp = connected_components(aliases)
     all_e = entities.select(F.col(name_col).alias("entity")).dropDuplicates()
     return (

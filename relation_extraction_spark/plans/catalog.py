@@ -48,11 +48,14 @@ class Catalog:
         self.spark = spark
         self.root = root.rstrip("/")
         self.inflight_grace_seconds = inflight_grace_seconds
+        # resolved once: each package segment of a py4j class lookup is one
+        # driver round trip, and every fs helper builds a Path
+        self._Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
 
     # --- hadoop fs helpers ---------------------------------------------------
 
     def _jpath(self, path_str: str):
-        return self.spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path_str)
+        return self._Path(path_str)
 
     def _fs(self, path_str: str):
         conf = self.spark.sparkContext._jsc.hadoopConfiguration()

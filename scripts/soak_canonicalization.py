@@ -149,7 +149,7 @@ def run_level(spark, k: int, stop_df: int | None = None,
     out["s_candidates"] = round(time.time() - t0, 2)
 
     t0 = time.time()
-    aliases = verified_alias_pairs(cands).localCheckpoint(eager=True)
+    aliases = verified_alias_pairs(cands, entities).localCheckpoint(eager=True)
     out["n_verified"] = aliases.count()
     out["s_verify"] = round(time.time() - t0, 2)
 

@@ -718,7 +718,7 @@ def test_anchor_aliases_feed_entity_linking(spark):
     entities = mined.select(F.col("alias").alias("entity")).distinct()
     cands = lsh_candidate_pairs(entities, bands=8)
     verified = {(r["a"], r["b"])
-                for r in verified_alias_pairs(cands).collect()}
+                for r in verified_alias_pairs(cands, entities).collect()}
     assert ("周杰伦", "周杰伦先生") in verified
     assert not any("完全无关词" in p for pair in verified for p in pair)
 

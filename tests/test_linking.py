@@ -5,6 +5,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from relation_extraction_spark.operators.linking import (
+    _shingles_expr,
     canonical_mapping,
     canonicalize_edges,
     connected_components,
@@ -30,10 +31,65 @@ def test_lsh_recall(spark, names):
 
 def test_verified_aliases(spark, names):
     cands = lsh_candidate_pairs(names, num_hashes=16, bands=8)
-    ok = {tuple(r) for r in verified_alias_pairs(cands).collect()}
+    ok = {tuple(r) for r in verified_alias_pairs(cands, names).collect()}
     flat = {x for p in ok for x in p}
     assert "张艺谋" in flat and "张艺谋导演" in flat
     assert "完全无关实体" not in flat
+
+
+def _per_pair_verify(candidates, jaccard_threshold, containment):
+    """Reference: the per-pair verification formula, evaluated on the
+    candidate rows themselves (shingles rebuilt for every pair)."""
+    sh = lambda c: _shingles_expr(c, 2)  # noqa: E731
+    cond = (F.size(F.array_intersect(sh("a"), sh("b")))
+            / F.size(F.array_union(sh("a"), sh("b")))) >= jaccard_threshold
+    if containment:
+        alias_ok = lambda c: ((F.length(c) > 4) & (~F.col(c).contains("·"))  # noqa: E731
+                              & F.col(c).rlike("[\\u4e00-\\u9fa5]"))
+        cond = cond | (
+            ((F.length("a") > 1) & F.col("b").contains(F.col("a")) & alias_ok("b"))
+            | ((F.length("b") > 1) & F.col("a").contains(F.col("b")) & alias_ok("a")))
+    return candidates.where(cond)
+
+
+def test_verified_alias_pairs_match_per_pair_formula(spark):
+    """Per-name features joined to both ends give exactly the rows (no
+    duplicates) the per-pair formula keeps, over every pair of a name table
+    that has duplicate rows, the empty string, a '·' name, Latin-only names,
+    names of length 1, 2, 4 and 5, and contained/containing forms."""
+    forms = ["", "张", "张三", "张三丰传", "张三丰传人", "著名张三丰传人",
+             "乔丹", "迈克尔·乔丹", "迈克尔·乔丹先生", "乔丹先生", "Jordan", "Jordan Ltd",
+             "Michael Jordan", "ab", "abab", "周杰伦", "周杰伦先生", "著名周杰伦",
+             "周杰伦的歌", "完全无关实体"]
+    names = spark.createDataFrame(
+        [(f,) for f in forms + forms[::3]], "entity string").repartition(3)
+    distinct = names.dropDuplicates()
+    cands = (distinct.alias("x").crossJoin(distinct.alias("y"))
+             .where(F.col("x.entity") < F.col("y.entity"))
+             .select(F.col("x.entity").alias("a"), F.col("y.entity").alias("b")))
+    for t in (0.5, 0.7, 1.0):
+        got = {}
+        for containment in (True, False):
+            got[containment] = sorted(map(tuple, verified_alias_pairs(
+                cands, names, jaccard_threshold=t,
+                containment=containment).collect()))
+            want = sorted(map(tuple, _per_pair_verify(cands, t, containment).collect()))
+            assert got[containment] == want, (t, containment)
+        assert ("乔丹", "迈克尔·乔丹先生") not in got[True]  # '·' alias gate
+        assert ("乔丹", "乔丹先生") not in got[True]  # alias length gate
+        assert ("周杰伦", "周杰伦的歌") in got[True]
+        assert len(got[False]) < len(got[True])
+
+
+def test_verification_never_enters_a_join_condition(spark, names):
+    """No join condition of the optimized mapping plan holds a lambda: a
+    filter on the candidate pair alone would be pushed below the candidate
+    dedup into the blocking self-join, rebuilding the interpreted shingle
+    arrays for every joined row. Per-name features keep it above the dedup."""
+    plan = canonical_mapping(names)._jdf.queryExecution().optimizedPlan().toString()
+    joins = [ln for ln in plan.splitlines() if "Join " in ln]
+    assert joins
+    assert not [ln for ln in joins if "lambdafunction" in ln]
 
 
 def _hash_name(i: int, n_chars: int = 5) -> str:

@@ -44,7 +44,7 @@ def test_kg_tables_commit_flat_and_match_star_reference(spark, run_dir):
     edges = self_check(kg_edges(cat.read("corrected")), cat.read("vertices"))
     entities = edges.select(F.col("subject").alias("entity")).union(
         edges.select("object")).dropDuplicates()
-    aliases = verified_alias_pairs(lsh_candidate_pairs(entities))
+    aliases = verified_alias_pairs(lsh_candidate_pairs(entities), entities)
     assert aliases.count() > 0  # the comparison must exercise some merge
     comp = connected_components_star(aliases)
     mapping = entities.join(comp, "entity", "left").select(
