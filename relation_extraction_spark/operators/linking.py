@@ -205,7 +205,6 @@ def lsh_candidate_pairs(
 def verified_alias_pairs(
     candidates: DataFrame,
     names: DataFrame,
-    name_col: str = "entity",
     jaccard_threshold: float = 0.7,
     shingle_n: int = 2,
     containment: bool = True,
@@ -216,19 +215,19 @@ def verified_alias_pairs(
     308-309, 321-322), which stop short names from chaining whole entity
     families together.
 
-    ``names`` is the table the candidates were blocked from (its
-    ``name_col``; duplicate rows are fine). Each distinct name's shingle
-    array and alias gate are computed once there and joined to both ends of
-    the candidates, so a pair only pays codegen'd work:
+    ``names`` is the table the candidates were blocked from, with the
+    names in column ``entity`` (duplicate rows are fine). Each distinct
+    name's shingle array and alias gate are computed once there and joined
+    to both ends of the candidates, so a pair only pays codegen'd work:
     ``size(array_intersect)/size(array_union)`` and ``contains``. The join
     is what keeps it that way: a filter over the pair alone is pushed by
     Catalyst below ``lsh_candidate_pairs``'s dedup into the blocking
     self-join, where the interpreted shingle lambdas were rebuilt four
     times for every joined row, once per block a pair shares. Candidates
     whose names are not in ``names`` are dropped."""
-    n = F.col(name_col)
+    n = F.col("entity")
     feats = names.select(n).dropDuplicates().select(
-        n, _shingles_expr(name_col, shingle_n).alias("sh"),
+        n, _shingles_expr("entity", shingle_n).alias("sh"),
         ((F.length(n) > 4) & ~n.contains("·")
          & n.rlike("[\\u4e00-\\u9fa5]")).alias("alias_ok"))
     side = lambda c: feats.select(  # noqa: E731
@@ -317,10 +316,9 @@ def canonical_mapping(
     corpus-wide decoration grams."""
     cands = lsh_candidate_pairs(entities, name_col, num_hashes, bands,
                                 signature_stop_max_df=signature_stop_max_df)
-    aliases = verified_alias_pairs(cands, entities, name_col,
-                                   jaccard_threshold=jaccard_threshold)
-    comp = connected_components(aliases)
     all_e = entities.select(F.col(name_col).alias("entity")).dropDuplicates()
+    aliases = verified_alias_pairs(cands, all_e, jaccard_threshold=jaccard_threshold)
+    comp = connected_components(aliases)
     return (
         all_e.join(comp, "entity", "left")
         .select("entity", F.coalesce("component", F.col("entity")).alias("canonical"))

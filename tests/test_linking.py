@@ -234,6 +234,14 @@ def test_partition_invariance(spark, names):
     assert m1 == m8
 
 
+def test_canonical_mapping_name_col(spark, names):
+    """A name column other than ``entity`` gives the same mapping."""
+    renamed = names.select(F.col("entity").alias("name"))
+    m = sorted(map(tuple, canonical_mapping(renamed, "name").collect()))
+    assert m == sorted(map(tuple, canonical_mapping(names).collect()))
+    assert len({c for _, c in m}) < len(m)  # some alias merged
+
+
 def test_star_cc_matches_min_label(spark):
     """large-star/small-star CC equals the one-task resolver on random
     graphs."""
