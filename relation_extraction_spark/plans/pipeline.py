@@ -314,8 +314,10 @@ class KGPipeline:
                     # with a freshly-committed table matching the sidecar.
                     if self.catalog.exists("curated"):
                         self.catalog.drop("curated")
-                    self.catalog.write("curate_opts", self.spark.createDataFrame(
-                        [(opts_json,)], "opts string"))
+                    # a JVM literal: createDataFrame over a Python list runs
+                    # a Python task per slot just to serialize one row
+                    self.catalog.write("curate_opts", self.spark.range(1).select(
+                        F.lit(opts_json).alias("opts")))
                 out["curated"] = self._stage("curated", curated, resume)
                 extract_input = out["curated"]
             out["triples"] = self._stage(
