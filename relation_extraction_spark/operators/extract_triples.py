@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import html as _html
 import re
-from collections.abc import Iterator
 
 import pandas as pd
 
@@ -28,6 +27,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType
 
 from ..schema import LIC2020_SCHEMA, TRIPLE_SCHEMA
+from .batches import row_frames
 from .decode import assemble_spos, decode_objects, decode_subjects, word_limit_maps
 from .rewrite import combine_spos, postprocess_1
 from .scorer import SurrogateScorer
@@ -294,24 +294,12 @@ def fused_extract_stage(docs: DataFrame, decode_fn, lang: str | None = "zh") -> 
         src = src.filter(F.col("lang") == lang)
     src = src.select("url", "text")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("url", "subject_type", "subject", "predicate",
-                                   "object_type", "object")}
-            for url, text in zip(pdf["url"], pdf["text"]):
-                if not text:
-                    continue
-                for spo in decode_fn(text):
-                    out["url"].append(url)
-                    out["subject_type"].append(spo["subject_type"])
-                    out["subject"].append(spo["subject"])
-                    out["predicate"].append(spo["predicate"])
-                    out["object_type"].append(spo["object_type"])
-                    out["object"].append(spo["object"])
-            # dtype=object keeps empty batches Arrow-convertible (map columns)
-            yield pd.DataFrame({k: pd.Series(v, dtype=object) for k, v in out.items()})
+    def per_doc(url, text):
+        return ({**spo, "url": url} for spo in decode_fn(text)) if text else ()
 
-    return src.mapInPandas(run, schema=TRIPLE_SCHEMA)
+    return src.mapInPandas(
+        lambda batches: row_frames(batches, TRIPLE_SCHEMA.names, per_doc),
+        schema=TRIPLE_SCHEMA)
 
 
 def extract_triples(docs: DataFrame, scorer=None, lang: str | None = "zh",

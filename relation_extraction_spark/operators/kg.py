@@ -19,10 +19,6 @@ the text, where the reference's own result depends on file order.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
@@ -33,6 +29,7 @@ from ..schema import (
     TRIPLE_SCHEMA,
     UNIQUE_PREDICATES,
 )
+from .batches import row_frames
 
 # Node.add_properity rules (reference utils/kg.py:127-147)
 _GENDER_MALE_SBJ = ("妻子",)
@@ -235,60 +232,60 @@ def _rewrite_predicate_cascade(pred: str, pair_preds: set[str]) -> str:
     return pred
 
 
-def _check_spo_kernel(rows: pd.DataFrame) -> list[dict]:
+# the kernel's input columns, in its parameter order
+_KERNEL_COLS = ["url", "text", "subject_type", "subject", "predicate", "object_type",
+                "object", "sbj_known", "obj_known", "pair_preds", "kg_adj",
+                "obj_professions", "obj_has_in_wife"]
+
+
+def _check_spo_kernel(url, text, subject_type, subject, predicate, object_type,
+                      obj, sbj_known, obj_known, pair_preds, kg_adj,
+                      obj_professions, obj_has_in_wife) -> list[dict]:
     """Per-row cascade; one input row may emit several corrected triples."""
-    out: list[dict] = []
-    for r in rows.itertuples(index=False):
-        spo = {
-            "url": r.url, "subject_type": r.subject_type, "subject": r.subject,
-            "predicate": r.predicate,
-            "object_type": dict(r.object_type), "object": dict(r.object),
-        }
-        sbj_known = bool(r.sbj_known)
-        obj_known = bool(r.obj_known)
-        pair_preds = set() if r.pair_preds is None else set(r.pair_preds)
-        if not (sbj_known and obj_known) or spo["predicate"] in pair_preds:
-            out.append(spo)
-            continue
-        # predicate rewrite within conflict groups (+ type re-derivation)
-        new_pred = _rewrite_predicate_cascade(spo["predicate"], pair_preds)
-        if new_pred != spo["predicate"]:
-            spo["predicate"] = new_pred
-            st, ot = MY_SCHEMA_DICT[new_pred]
-            spo["subject_type"] = st
-            spo["object_type"] = {**spo["object_type"], "@value": ot["@value"]}
-        # profession-dominance rewrite for 歌手/作词/作曲 (no type re-derivation)
-        profs = {} if r.obj_professions is None else dict(r.obj_professions)
-        if spo["predicate"] in PROFESSION_CONFLICTS and profs.get(spo["predicate"], 0) == 0:
-            for p in PROFESSION_CONFLICTS:
-                if profs.get(p, 0) > 30:
-                    spo["predicate"] = p
+    spo = {
+        "url": url, "subject_type": subject_type, "subject": subject,
+        "predicate": predicate,
+        "object_type": dict(object_type), "object": dict(obj),
+    }
+    pair_preds = set() if pair_preds is None else set(pair_preds)
+    if not (sbj_known and obj_known) or spo["predicate"] in pair_preds:
+        return [spo]
+    # predicate rewrite within conflict groups (+ type re-derivation)
+    new_pred = _rewrite_predicate_cascade(spo["predicate"], pair_preds)
+    if new_pred != spo["predicate"]:
+        spo["predicate"] = new_pred
+        st, ot = MY_SCHEMA_DICT[new_pred]
+        spo["subject_type"] = st
+        spo["object_type"] = {**spo["object_type"], "@value": ot["@value"]}
+    # profession-dominance rewrite for 歌手/作词/作曲 (no type re-derivation)
+    profs = {} if obj_professions is None else dict(obj_professions)
+    if spo["predicate"] in PROFESSION_CONFLICTS and profs.get(spo["predicate"], 0) == 0:
+        for p in PROFESSION_CONFLICTS:
+            if profs.get(p, 0) > 30:
+                spo["predicate"] = p
+                break
+    # object correction for unique predicates (utils/kg.py:243-264) —
+    # adjacency looked up for the (possibly rewritten) predicate
+    emitted: list[dict] = []
+    if spo["predicate"] in UNIQUE_PREDICATES:
+        kg_adj = {} if kg_adj is None else dict(kg_adj)
+        objs = kg_adj.get(spo["predicate"])
+        kg_objs = sorted([] if objs is None else list(objs))  # deterministic order (see module note)
+        text = text or ""
+        obj_val = spo["object"]["@value"]
+        for name in kg_objs:
+            if len(name) > 1 and text.find(name) != -1:
+                replacement = name if name not in obj_val else obj_val
+                if spo["predicate"] != "妻子":
+                    spo["object"] = {**spo["object"], "@value": replacement}
                     break
-        # object correction for unique predicates (utils/kg.py:243-264) —
-        # adjacency looked up for the (possibly rewritten) predicate
-        emitted: list[dict] = []
-        if spo["predicate"] in UNIQUE_PREDICATES:
-            kg_adj = {} if r.kg_adj is None else dict(r.kg_adj)
-            objs = kg_adj.get(spo["predicate"])
-            kg_objs = sorted([] if objs is None else list(objs))  # deterministic order (see module note)
-            text = r.text or ""
-            obj_val = spo["object"]["@value"]
-            for name in kg_objs:
-                if len(name) > 1 and text.find(name) != -1:
-                    replacement = name if name not in obj_val else obj_val
-                    if spo["predicate"] != "妻子":
-                        spo["object"] = {**spo["object"], "@value": replacement}
-                        break
-                    new_spo = {**spo, "object": {**spo["object"], "@value": replacement}}
-                    if new_spo not in emitted:
-                        emitted.append(new_spo)
-                    if (spo not in emitted and not bool(r.obj_has_in_wife)
-                            and len(kg_objs) > 1):
-                        emitted.append(spo)
-        if not emitted:
-            emitted = [spo]
-        out.extend(emitted)
-    return out
+                new_spo = {**spo, "object": {**spo["object"], "@value": replacement}}
+                if new_spo not in emitted:
+                    emitted.append(new_spo)
+                if (spo not in emitted and not bool(obj_has_in_wife)
+                        and len(kg_objs) > 1):
+                    emitted.append(spo)
+    return emitted or [spo]
 
 
 MAX_ADJ_OBJECTS = 10_000
@@ -380,21 +377,11 @@ def kg_correct(
         .join(vtx, F.col("_obj") == vtx["_obj_ent"], "left")
     )
 
-    cols = ["url", "text", "subject_type", "subject", "predicate", "object_type",
-            "object", "sbj_known", "obj_known", "pair_preds", "kg_adj",
-            "obj_professions", "obj_has_in_wife"]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = _check_spo_kernel(pdf)
-            yield pd.DataFrame(
-                {k: pd.Series([r[k] for r in rows], dtype=object)
-                 for k in ("url", "subject_type", "subject", "predicate",
-                           "object_type", "object")}
-            )
-
     corrected = (
-        candidates.select(*cols).mapInPandas(run, schema=_CORRECT_SCHEMA)
+        candidates.select(*_KERNEL_COLS)
+        .mapInPandas(lambda batches: row_frames(batches, _CORRECT_SCHEMA.names,
+                                                _check_spo_kernel),
+                     schema=_CORRECT_SCHEMA)
         .unionByName(passthrough)
     )
     # reference dedups the per-doc list after correction (utils/kg.py:276-279)

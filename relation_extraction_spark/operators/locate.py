@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from .batches import row_frames
+
 LOCATE_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
     T.StructField("entity", T.StringType()),
@@ -148,14 +150,8 @@ def _cached_automaton(token: str, bc) -> AhoCorasick:
     return ac
 
 
-def _spans_frame(rows: list[tuple]) -> pd.DataFrame:
-    """(url, entity, n_occ, spans) tuples → the LOCATE_SCHEMA frame."""
-    return pd.DataFrame({
-        "url": [r[0] for r in rows],
-        "entity": [r[1] for r in rows],
-        "n_occ": pd.Series([r[2] for r in rows], dtype="int32"),
-        "spans": pd.Series([r[3] for r in rows], dtype=object),
-    })
+def _span_record(url: str, entity: str, spans: list[tuple[int, int]]) -> dict:
+    return {"url": url, "entity": entity, "n_occ": len(spans), "spans": spans}
 
 
 def locate_doc_entities(docs: DataFrame, doc_entities: DataFrame,
@@ -182,16 +178,13 @@ def locate_doc_entities(docs: DataFrame, doc_entities: DataFrame,
         F.col(id_col).cast("string").alias("url"), F.col(text_col).alias("text")
     ).join(ents, "url", "inner")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, text, ent_list in zip(pdf["url"], pdf["text"], pdf["_ents"]):
-                for ent in ent_list:
-                    spans = all_occurrences(text or "", ent)
-                    rows.append((url, ent, len(spans), spans))
-            yield _spans_frame(rows)
+    def per_doc(url, text, doc_ents):
+        for ent in doc_ents:
+            yield _span_record(url, ent, all_occurrences(text or "", ent))
 
-    return src.mapInPandas(run, schema=LOCATE_SCHEMA)
+    return src.mapInPandas(
+        lambda batches: row_frames(batches, LOCATE_SCHEMA.names, per_doc),
+        schema=LOCATE_SCHEMA)
 
 
 def locate_entities(docs: DataFrame, entities: DataFrame,
@@ -228,14 +221,13 @@ def locate_entities(docs: DataFrame, entities: DataFrame,
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         entity_list = bc.value
         ac = _cached_automaton(bc_token, bc)
-        for pdf in batches:
-            rows = []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                per_pid = ac.spans_non_overlapping(text or "")
-                for pid, ent in enumerate(entity_list):
-                    spans = per_pid.get(pid, [])
-                    rows.append((url, ent, len(spans), spans))
-            yield _spans_frame(rows)
+
+        def per_doc(url, text):
+            per_pid = ac.spans_non_overlapping(text or "")
+            for pid, ent in enumerate(entity_list):
+                yield _span_record(url, ent, per_pid.get(pid, []))
+
+        yield from row_frames(batches, LOCATE_SCHEMA.names, per_doc)
 
     return src.mapInPandas(run, schema=LOCATE_SCHEMA)
 

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from .batches import row_frames
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.StringType(), False),
     T.StructField("kind", T.StringType()),        # image | audio | video
@@ -216,30 +218,22 @@ def decode_media(media: DataFrame) -> DataFrame:
     stage retry."""
     src = media.select("media_id", "kind", "payload")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                rec = {"media_id": mid, "kind": kind, "format": None,
-                       "width": None, "height": None, "n_channels": None,
-                       "sample_rate": None, "duration_ms": None,
-                       "mean_level": None, "ok": False, "err": None}
-                try:
-                    d = _decode_any(bytes(payload) if payload is not None else b"")
-                    rec.update({k: d.get(k) for k in
-                                ("format", "width", "height", "n_channels",
-                                 "sample_rate", "duration_ms", "mean_level")})
-                    rec["ok"] = True
-                except ValueError as exc:
-                    rec["err"] = str(exc)
-                rows.append(rec)
-            out = pd.DataFrame(rows)
-            for int_col in ("width", "height", "n_channels", "sample_rate",
-                            "duration_ms"):
-                out[int_col] = out[int_col].astype("Int32")
-            yield out
+    def per_item(mid, kind, payload):
+        rec = {"media_id": mid, "kind": kind, "ok": False, "err": None}
+        try:
+            d = _decode_any(bytes(payload) if payload is not None else b"")
+            rec["ok"] = True
+        except ValueError as exc:
+            d = {}
+            rec["err"] = str(exc)
+        rec.update({k: d.get(k) for k in
+                    ("format", "width", "height", "n_channels",
+                     "sample_rate", "duration_ms", "mean_level")})
+        return [rec]
 
-    return src.mapInPandas(run, schema=DECODE_SCHEMA)
+    return src.mapInPandas(
+        lambda batches: row_frames(batches, DECODE_SCHEMA.names, per_item),
+        schema=DECODE_SCHEMA)
 
 
 def _feature_from_digest(digest: bytes, dim: int = FEATURE_DIM) -> list[float]:

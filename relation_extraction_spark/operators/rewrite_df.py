@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..schema import TRIPLE_SCHEMA
+from .batches import records_frame
 from .rewrite import combine_spos, postprocess_1
 
 _TRIPLE_COLS = ["url", "subject_type", "subject", "predicate", "object_type", "object"]
@@ -86,7 +87,7 @@ def _run_doc_kernel(pdf: pd.DataFrame, per_doc, with_text: bool) -> pd.DataFrame
     pandas batch, emitting one concatenated frame. Group prep (dict rows +
     canonical in-group sort) matches the old per-group applyInPandas form
     exactly."""
-    out: dict[str, list] = {k: [] for k in _TRIPLE_COLS}
+    records: list[dict] = []
     for url, g in pdf.groupby("url", sort=False, dropna=False):
         text = (g["text"].iloc[0] or "") if with_text else ""
         spos = [
@@ -97,12 +98,8 @@ def _run_doc_kernel(pdf: pd.DataFrame, per_doc, with_text: bool) -> pd.DataFrame
         ]
         spos.sort(key=lambda s: (s["subject"], s["predicate"],
                                  json.dumps(s["object"], sort_keys=True, ensure_ascii=False)))
-        spos = per_doc(url, text, spos)
-        if spos:
-            out["url"].extend([url] * len(spos))
-            for k in _TRIPLE_COLS[1:]:
-                out[k].extend(s[k] for s in spos)
-    return pd.DataFrame({k: pd.Series(v, dtype=object) for k, v in out.items()})
+        records.extend({**s, "url": url} for s in per_doc(url, text, spos))
+    return records_frame(records, _TRIPLE_COLS)
 
 
 def _grouped_stage(triples: DataFrame, cols: list[str], per_doc,

@@ -21,6 +21,7 @@ from pyspark.sql import types as T
 
 from ..functions.tokenizer import SPLIT_CHARS, hand_features, tokenize_with_offsets
 from ..schema import MAX_TOKENS
+from .batches import row_frames
 
 TOKENIZE_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -140,14 +141,9 @@ def tokenize_df(
 
         v = bc.value
         wp = WordPieceTokenizer(bc_wp.value) if bc_wp is not None else None
-        for pdf in batches:
-            rows = [tokenize_document(u, t, v, wp, segmenter)
-                    for u, t in zip(pdf["url"], pdf["text"])]
-            yield pd.DataFrame({
-                k: pd.Series([r[k] for r in rows], dtype=object)
-                for k in ("url", "tokens", "starts", "ends", "hand", "b2w",
-                          "w2v_ids", "token_ids")
-            })
+        yield from row_frames(
+            batches, TOKENIZE_SCHEMA.names,
+            lambda url, text: [tokenize_document(url, text, v, wp, segmenter)])
 
     return src.mapInPandas(run, schema=TOKENIZE_SCHEMA)
 

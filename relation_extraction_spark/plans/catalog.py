@@ -37,7 +37,15 @@ a deployment that can guarantee a single writer may pass
 
 from __future__ import annotations
 
+import json
+import time
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+
+def _struct(schema_json: str) -> T.StructType:
+    return T.StructType.fromJson(json.loads(schema_json))
 
 
 class Catalog:
@@ -68,28 +76,27 @@ class Catalog:
     def _version_path(self, name: str, version: int) -> str:
         return f"{self.path(name)}/v{version}"
 
-    def _committed_versions(self, name: str) -> list[int]:
-        fs, p = self._fs(self.path(name))
-        if not fs.exists(p):
-            return []
-        out = []
-        for st in fs.listStatus(p):
-            n = st.getPath().getName()
-            if st.isDirectory() and n.startswith("v") and n[1:].isdigit():
-                if fs.exists(self._jpath(f"{self.path(name)}/{n}/_SUCCESS")):
-                    out.append(int(n[1:]))
-        return sorted(out)
+    def _versions(self, table_dir: str, prefix: str) -> dict[int, tuple[bool, int]]:
+        """``<prefix><N>`` directories under ``table_dir`` → (committed,
+        modification ms). One glob lists the directories together with
+        their ``_SUCCESS`` markers (Hadoop expands the braces into one
+        pattern per level); a missing ``table_dir`` lists nothing. Like
+        Spark's own parquet reads, this takes the root as a glob."""
+        fs, p = self._fs(f"{table_dir}/{{{prefix}*,{prefix}*/_SUCCESS}}")
+        found: dict[str, int] = {}
+        committed: set[str] = set()
+        for st in fs.globStatus(p) or []:
+            path = st.getPath()
+            n = path.getName()
+            if n == "_SUCCESS":
+                committed.add(path.getParent().getName())
+            elif st.isDirectory():
+                found[n] = st.getModificationTime()
+        return {int(n[len(prefix):]): (n in committed, ms)
+                for n, ms in found.items() if n[len(prefix):].isdigit()}
 
-    def _all_versions(self, name: str) -> list[int]:
-        fs, p = self._fs(self.path(name))
-        if not fs.exists(p):
-            return []
-        out = []
-        for st in fs.listStatus(p):
-            n = st.getPath().getName()
-            if st.isDirectory() and n.startswith("v") and n[1:].isdigit():
-                out.append(int(n[1:]))
-        return sorted(out)
+    def _committed_versions(self, name: str) -> list[int]:
+        return sorted(v for v, (ok, _) in self._versions(self.path(name), "v").items() if ok)
 
     # --- table operations ------------------------------------------------------
 
@@ -105,7 +112,7 @@ class Catalog:
         # where an empty committed table is permanently unreadable
         return f"{self.path(name)}/_schema_v{version}.json"
 
-    def _write_schema_sidecar(self, name: str, version: int, df: DataFrame) -> None:
+    def _write_schema(self, path: str, df: DataFrame) -> None:
         """Persist the table schema next to the data: an EMPTY result set
         (a legitimate outcome for a stage slice at scale — e.g. a language
         filter that drops everything) writes no parquet part files, and a
@@ -115,43 +122,43 @@ class Catalog:
         was never committed, and the file is simply overwritten when that
         version number is next allocated (vacuum cannot see it — it scans
         version DIRECTORIES, which the crash never created)."""
-        fs, p = self._fs(self._schema_sidecar_path(name, version))
+        fs, p = self._fs(path)
         out = fs.create(p, True)
         try:
             out.write(bytearray(df.schema.json().encode("utf-8")))
         finally:
             out.close()
 
+    def _read_schema(self, path: str) -> str | None:
+        """A schema sidecar's JSON text; None when there is no such file."""
+        fs, p = self._fs(path)
+        if not fs.exists(p):
+            return None
+        stream = fs.open(p)
+        try:
+            return bytes(stream.readAllBytes()).decode("utf-8")
+        finally:
+            stream.close()
+
     def write(self, name: str, df: DataFrame) -> None:
-        nxt = (self._all_versions(name) or [0])[-1] + 1
-        self._write_schema_sidecar(name, nxt, df)  # BEFORE the data commit
+        nxt = max(self._versions(self.path(name), "v"), default=0) + 1
+        self._write_schema(self._schema_sidecar_path(name, nxt), df)  # BEFORE the data commit
         df.write.mode("overwrite").parquet(self._version_path(name, nxt))
         # vacuum: keep the new snapshot + KEEP_SNAPSHOTS-1 previous committed.
         # Uncommitted directories are our own crashed leftovers under the
         # single-writer contract; with inflight_grace_seconds > 0 a recently
         # modified uncommitted dir is spared (another writer may be mid-write
         # — module docstring, Concurrency contract).
-        import time
-
-        committed = set(self._committed_versions(name))
+        versions = self._versions(self.path(name), "v")
+        keep = sorted(v for v, (ok, _) in versions.items() if ok)[-self.KEEP_SNAPSHOTS:]
         fs, _ = self._fs(self.path(name))
-        keep = set(sorted(committed)[-self.KEEP_SNAPSHOTS:])
         now_ms = time.time() * 1000
-        for v in self._all_versions(name):
+        for v, (ok, mtime_ms) in sorted(versions.items()):
             if v in keep:
                 continue
-            if v not in committed and self.inflight_grace_seconds > 0:
-                try:
-                    st = fs.getFileStatus(self._jpath(self._version_path(name, v)))
-                except Exception as exc:
-                    # deleted between listing and stat: nothing to vacuum.
-                    # Any OTHER filesystem error must propagate — swallowing
-                    # it would permanently exempt the version from vacuuming.
-                    if "FileNotFoundException" in str(exc):
-                        continue
-                    raise
-                if now_ms - st.getModificationTime() < self.inflight_grace_seconds * 1000:
-                    continue
+            if (not ok and self.inflight_grace_seconds > 0
+                    and now_ms - mtime_ms < self.inflight_grace_seconds * 1000):
+                continue
             fs.delete(self._jpath(self._version_path(name, v)), True)
             fs.delete(self._jpath(self._schema_sidecar_path(name, v)), False)
 
@@ -182,21 +189,10 @@ class Catalog:
         # footer-based inference; absent on pre-sidecar catalogs → infer.
         # Probe the current table-dir location first, then the legacy
         # in-version location an earlier code generation wrote.
-        fs, sp = self._fs(self._schema_sidecar_path(name, version))
-        if not fs.exists(sp):
-            fs, sp = self._fs(f"{vpath}/_schema.json")
-        if fs.exists(sp):
-            import json
-
-            from pyspark.sql import types as T
-
-            stream = fs.open(sp)
-            try:
-                raw = bytes(stream.readAllBytes()).decode("utf-8")
-            finally:
-                stream.close()
-            schema = T.StructType.fromJson(json.loads(raw))
-            return self.spark.read.schema(schema).parquet(vpath)
+        for sp in (self._schema_sidecar_path(name, version), f"{vpath}/_schema.json"):
+            raw = self._read_schema(sp)
+            if raw is not None:
+                return self.spark.read.schema(_struct(raw)).parquet(vpath)
         return self.spark.read.parquet(vpath)
 
     def drop(self, name: str) -> None:
@@ -222,17 +218,8 @@ class Catalog:
         return f"{self._delta_root(name)}/d{delta_id}"
 
     def committed_delta_ids(self, name: str) -> list[int]:
-        fs, p = self._fs(self._delta_root(name))
-        if not fs.exists(p):
-            return []
-        out = []
-        for st in fs.listStatus(p):
-            n = st.getPath().getName()
-            if st.isDirectory() and n.startswith("d") and n[1:].isdigit():
-                if fs.exists(self._jpath(
-                        f"{self._delta_root(name)}/{n}/_SUCCESS")):
-                    out.append(int(n[1:]))
-        return sorted(out)
+        return sorted(i for i, (ok, _) in self._versions(self._delta_root(name), "d").items()
+                      if ok)
 
     def _delta_sidecar_path(self, name: str, delta_id: int) -> str:
         return f"{self._delta_root(name)}/_schema_d{delta_id}.json"
@@ -243,12 +230,7 @@ class Catalog:
         crashed-uncommitted write lands in the same directory. The schema
         sidecar is written BEFORE the data commit, same crash-ordering
         argument as snapshots (an empty provenance batch is legitimate)."""
-        fs, p = self._fs(self._delta_sidecar_path(name, delta_id))
-        out = fs.create(p, True)
-        try:
-            out.write(bytearray(df.schema.json().encode("utf-8")))
-        finally:
-            out.close()
+        self._write_schema(self._delta_sidecar_path(name, delta_id), df)
         df.write.mode("overwrite").parquet(self._delta_dir(name, delta_id))
 
     def read_deltas(self, name: str, ids: list[int]) -> DataFrame:
@@ -258,31 +240,24 @@ class Catalog:
         upgrade between pending folds) would otherwise be silently misread
         under the first batch's schema; the fix is to compact before
         upgrading (round-7 review)."""
-        import json
-
-        from pyspark.sql import types as T
-
         if not ids:
             raise ValueError(f"read_deltas({name}): empty id list")
 
         def _sidecar(i: int) -> str:
-            fs, sp = self._fs(self._delta_sidecar_path(name, i))
-            stream = fs.open(sp)
-            try:
-                return bytes(stream.readAllBytes()).decode("utf-8")
-            finally:
-                stream.close()
+            raw = self._read_schema(self._delta_sidecar_path(name, i))
+            if raw is None:
+                raise FileNotFoundError(
+                    f"read_deltas({name}): delta d{i} has no schema sidecar")
+            return raw
 
         raw = _sidecar(ids[0])
         for i in ids[1:]:
-            other = _sidecar(i)
-            if other != raw:
+            if _sidecar(i) != raw:
                 raise ValueError(
                     f"read_deltas({name}): delta d{i}'s schema differs from"
                     f" d{ids[0]}'s — pending deltas span a schema change;"
                     " compact the table before upgrading the writer")
-        schema = T.StructType.fromJson(json.loads(raw))
-        return self.spark.read.schema(schema).parquet(
+        return self.spark.read.schema(_struct(raw)).parquet(
             *[self._delta_dir(name, i) for i in ids])
 
     def drop_deltas(self, name: str, ids: list[int]) -> None:

@@ -236,6 +236,10 @@ def test_decode_media_real_codecs(spark):
         "media_id string, kind string, payload binary")
     bad = decode_media(png_like).collect()[0]
     assert not bad["ok"] and "png" in bad["err"]
+    # an all-failing batch: every nullable int / double column is null
+    for col in ("width", "height", "n_channels", "sample_rate", "duration_ms",
+                "mean_level"):
+        assert bad[col] is None, col
 
 
 def test_decode_wav_differential_vs_stdlib():

@@ -300,7 +300,7 @@ def test_orphan_schema_sidecar_is_harmless(spark, tmp_path):
 
     cat = Catalog(spark, str(tmp_path))
     df = spark.range(3).selectExpr("cast(id as string) as url")
-    cat._write_schema_sidecar("t", 1, df)  # simulated crash before data
+    cat._write_schema(cat._schema_sidecar_path("t", 1), df)  # simulated crash before data
     assert not cat.exists("t")
     cat.write("t", df)
     assert cat.read("t").count() == 3
@@ -342,10 +342,13 @@ def test_empty_corpus_pipeline(spark, tmp_path):
     assert pipe.stage_seconds["triples"] == 0.0
 
 
-def test_resume_curate_over_uncurated_catalog_refuses(spark, run_dir):
+def test_resume_curate_over_uncurated_catalog_refuses(spark, tmp_path):
     """Toggling curate=True against a catalog whose triples were committed
     WITHOUT curation must fail loudly, not serve stale uncurated triples."""
-    pipe = KGPipeline(spark, run_dir)  # run_dir was built without curation
+    from relation_extraction_spark.operators.extract_triples import extract_triples
+
+    pipe = KGPipeline(spark, str(tmp_path))
+    pipe.catalog.write("triples", extract_triples(documents_df(spark, 10)))
     with pytest.raises(ValueError, match="curated"):
         pipe.run(documents_df(spark, 10), resume=True, curate=True)
 
