@@ -76,24 +76,6 @@ def word_limit_maps(word_mask) -> tuple[list[int], list[int]]:
     return ps, pe
 
 
-def nearest_maps(
-    start_idx: np.ndarray, end_idx: np.ndarray, seq_len: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """ps_map[i] = latest start <= i (else -999); pe_map[i] = earliest end >= i (else 999)."""
-    pos = np.arange(seq_len)
-    if start_idx.size:
-        k = np.searchsorted(start_idx, pos, side="right") - 1
-        ps_map = np.where(k >= 0, start_idx[np.clip(k, 0, None)], NEG)
-    else:
-        ps_map = np.full(seq_len, NEG, dtype=np.int64)
-    if end_idx.size:
-        k = np.searchsorted(end_idx, pos, side="left")
-        pe_map = np.where(k < end_idx.size, end_idx[np.clip(k, None, end_idx.size - 1)], POS)
-    else:
-        pe_map = np.full(seq_len, POS, dtype=np.int64)
-    return ps_map.astype(np.int64), pe_map.astype(np.int64)
-
-
 def _is_crossing(point: tuple[int, int], groups: list[list[tuple[int, int]]]) -> bool:
     """True iff point's start lies strictly inside some span AND its end lies
     strictly inside some (possibly different) span. The two containment flags

@@ -130,7 +130,7 @@ def cooccurrence_edges(
     (two entities that keep appearing in the same pages are related even
     when no predicate pattern fires; the classic KG-completion signal).
 
-    Input: a (doc, entity) mention table (``locate.locate_entities``
+    Input: a (doc, entity) mention table (``locate.locate_doc_entities``
     output or the extraction's subject/object columns). Presence counts,
     not multiplicity: a page mentioning a pair fifty times is one
     co-occurring document. Output per unordered pair (``a`` < ``b``):

@@ -2,17 +2,13 @@
 each document (training-label projection; reference main.py:60-72 +
 utils/kmp.py, char-level variant data/lic_2020.py:86-105).
 
-DataFrame shape: documents ⋈ entities (broadcast — entity lists are small
-relative to the corpus), then a vectorized scan yields one row per (url,
-entity) with the occurrence span list. Count-only projection is pure SQL
+DataFrame shape: each document's own entity list (reference main.py:380-405)
+joined to its text, then a vectorized scan yields one row per (url, entity)
+with the occurrence span list. Count-only projection is pure SQL
 (length-difference trick), used by the driver oracle.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
@@ -42,118 +38,6 @@ def all_occurrences(text: str, entity: str) -> list[tuple[int, int]]:
         i += len(entity)  # non-overlapping, like the reference's KMP restart
 
 
-# Broadcast-vocabulary cap: with the Aho-Corasick scan the per-document cost
-# is vocabulary-independent, so the binding constraint is AUTOMATON MEMORY in
-# each Python worker (~a few hundred bytes per trie node, one automaton per
-# worker process). 100k entities ≈ 500k nodes ≈ low hundreds of MB across a
-# node's workers — beyond that, use locate_doc_entities (data-scaled).
-MAX_BROADCAST_ENTITIES = 100_000
-
-
-class AhoCorasick:
-    """Multi-pattern matcher: one pass over the text regardless of
-    vocabulary size (Aho & Corasick, CACM 1975 — the classic automaton, a
-    public algorithm; the reference scans per-pattern with KMP,
-    utils/kmp.py:1-36, which is O(|text|·|patterns|) against a fixed
-    vocabulary and was the round-4 VERDICT 'weak' mark on this operator).
-
-    dict-of-dicts goto (CJK alphabets are sparse — a dense table would be
-    65k-wide), BFS fail links with merged outputs. ``spans_non_overlapping``
-    reproduces the reference find-loop semantics exactly: per pattern,
-    greedy left-to-right with restart at match-end+1."""
-
-    __slots__ = ("goto", "fail", "out", "lens")
-
-    def __init__(self, patterns: list[str]):
-        self.goto: list[dict] = [{}]
-        out: list[tuple] = [()]
-        self.lens = [len(p) for p in patterns]
-        for pid, p in enumerate(patterns):
-            if not p:
-                continue  # empty pattern never matches (find-loop parity)
-            s = 0
-            for ch in p:
-                nxt = self.goto[s].get(ch)
-                if nxt is None:
-                    self.goto.append({})
-                    out.append(())
-                    nxt = len(self.goto) - 1
-                    self.goto[s][ch] = nxt
-                s = nxt
-            out[s] = out[s] + (pid,)
-        from collections import deque
-
-        self.fail = [0] * len(self.goto)
-        q = deque(self.goto[0].values())
-        while q:
-            s = q.popleft()
-            for ch, t in self.goto[s].items():
-                q.append(t)
-                f = self.fail[s]
-                while f and ch not in self.goto[f]:
-                    f = self.fail[f]
-                self.fail[t] = self.goto[f].get(ch, 0)
-                out[t] = out[t] + out[self.fail[t]]
-        self.out = out
-
-    def match_ends(self, text: str) -> dict[int, list[int]]:
-        """pattern-id → ascending list of match END indices (all matches,
-        overlapping included)."""
-        goto, fail, out = self.goto, self.fail, self.out
-        ends: dict[int, list[int]] = {}
-        s = 0
-        for i, ch in enumerate(text):
-            while s and ch not in goto[s]:
-                s = fail[s]
-            s = goto[s].get(ch, 0)
-            if out[s]:
-                for pid in out[s]:
-                    ends.setdefault(pid, []).append(i)
-        return ends
-
-    def spans_non_overlapping(self, text: str) -> dict[int, list[tuple[int, int]]]:
-        """pattern-id → find-loop-equivalent span list: greedy left-to-right,
-        next search resumes at match end + 1 (reference KMP restart)."""
-        result: dict[int, list[tuple[int, int]]] = {}
-        for pid, ends in self.match_ends(text).items():
-            n = self.lens[pid]
-            spans, last_end = [], -1
-            for e in ends:
-                s0 = e - n + 1
-                if s0 > last_end:
-                    spans.append((s0, e))
-                    last_end = e
-            result[pid] = spans
-        return result
-
-
-# per-worker automaton cache: Python workers are reused across tasks
-# (spark.python.worker.reuse), so the build cost is paid once per worker
-# per broadcast vocabulary, not once per task. Keyed by a driver-minted
-# token captured in the task closure (worker-side Broadcast objects carry
-# no stable id). Tiny LRU (2 slots, insertion-ordered dict): one live
-# vocabulary is the norm, but two ALTERNATING vocabularies in one session
-# (e.g. locate against the KG aliases and the benchmark grams in the same
-# job) must not rebuild the automaton every task batch — the round-5
-# single-slot clear() did exactly that (judge finding #3).
-_AC_CACHE: dict[str, AhoCorasick] = {}
-_AC_CACHE_SLOTS = 2
-
-
-def _cached_automaton(token: str, bc) -> AhoCorasick:
-    ac = _AC_CACHE.pop(token, None)
-    if ac is None:
-        while len(_AC_CACHE) >= _AC_CACHE_SLOTS:
-            _AC_CACHE.pop(next(iter(_AC_CACHE)))  # evict least-recent
-        ac = AhoCorasick(bc.value)
-    _AC_CACHE[token] = ac  # (re)insert at most-recent position
-    return ac
-
-
-def _span_record(url: str, entity: str, spans: list[tuple[int, int]]) -> dict:
-    return {"url": url, "entity": entity, "n_occ": len(spans), "spans": spans}
-
-
 def locate_doc_entities(docs: DataFrame, doc_entities: DataFrame,
                         id_col: str = "url", text_col: str = "text") -> DataFrame:
     """Per-document locate — each document scans only its OWN entities,
@@ -165,8 +49,7 @@ def locate_doc_entities(docs: DataFrame, doc_entities: DataFrame,
     per document (bounded by the doc's own triple count), joined to the text,
     and one Arrow pass scans each text against its list — cost scales with
     the DATA, not with a vocabulary, and nothing touches the driver. This is
-    the 100-TB path; ``locate_entities`` below is the small-fixed-vocabulary
-    convenience variant."""
+    the 100-TB path."""
     ents = (
         doc_entities.select(F.col(id_col).cast("string").alias("url"),
                             "entity")
@@ -180,56 +63,12 @@ def locate_doc_entities(docs: DataFrame, doc_entities: DataFrame,
 
     def per_doc(url, text, doc_ents):
         for ent in doc_ents:
-            yield _span_record(url, ent, all_occurrences(text or "", ent))
+            spans = all_occurrences(text or "", ent)
+            yield {"url": url, "entity": ent, "n_occ": len(spans), "spans": spans}
 
     return src.mapInPandas(
         lambda batches: row_frames(batches, LOCATE_SCHEMA.names, per_doc),
         schema=LOCATE_SCHEMA)
-
-
-def locate_entities(docs: DataFrame, entities: DataFrame,
-                    id_col: str = "url", text_col: str = "text",
-                    max_entities: int = MAX_BROADCAST_ENTITIES) -> DataFrame:
-    """One row per (url, entity) with the occurrence span list.
-
-    The entity list is collected + broadcast (small by contract — it is the
-    training-label vocabulary) and each text is scanned ONCE by a per-worker
-    cached Aho-Corasick automaton: per-document cost is O(|text| + matches),
-    INDEPENDENT of vocabulary size (the round-4 'weak' mark was a per-
-    (doc × entity) str.find loop — 10⁶ scans per document at the old cap).
-    Each text crosses the Arrow boundary exactly once. The guard fails fast
-    with an actionable message instead of a worker OOM when the 'small'
-    contract is violated — use ``locate_doc_entities`` for data-scaled
-    entity sets."""
-    # one action: the collect is bounded at max_entities+1 rows, so the
-    # guard and the vocabulary come from the same (safe) scan
-    rows = entities.select("entity").dropDuplicates().limit(max_entities + 1).collect()
-    if len(rows) > max_entities:
-        raise ValueError(
-            f"locate_entities: entity vocabulary exceeds {max_entities} rows; "
-            "this variant broadcasts the vocabulary (and builds a per-worker "
-            "Aho-Corasick automaton over it). Use locate_doc_entities "
-            "(per-document entity lists) instead.")
-    ents = sorted(r["entity"] for r in rows)
-    bc = docs.sparkSession.sparkContext.broadcast(ents)
-    import uuid
-
-    bc_token = uuid.uuid4().hex
-    src = docs.select(
-        F.col(id_col).cast("string").alias("url"), F.col(text_col).alias("text"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        entity_list = bc.value
-        ac = _cached_automaton(bc_token, bc)
-
-        def per_doc(url, text):
-            per_pid = ac.spans_non_overlapping(text or "")
-            for pid, ent in enumerate(entity_list):
-                yield _span_record(url, ent, per_pid.get(pid, []))
-
-        yield from row_frames(batches, LOCATE_SCHEMA.names, per_doc)
-
-    return src.mapInPandas(run, schema=LOCATE_SCHEMA)
 
 
 def occurrence_counts_sql_style(docs: DataFrame, entities: DataFrame,

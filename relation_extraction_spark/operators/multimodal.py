@@ -240,15 +240,6 @@ def _feature_from_digest(digest: bytes, dim: int = FEATURE_DIM) -> list[float]:
     return [digest[i % 32] / 256.0 for i in range(dim)]
 
 
-def fake_feature(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """Deterministic stand-in for decode→embed: sha256 bytes → floats in [0,1).
-
-    Marks exactly where a real decoder/encoder plugs in; everything around it
-    (Arrow batching, schema, partitioning) is production-shaped.
-    """
-    return _feature_from_digest(hashlib.sha256(payload or b"").digest(), dim)
-
-
 def extract_features(media: DataFrame, batch_size_hint: int | None = None) -> DataFrame:
     """media(MEDIA_SCHEMA) → per-item feature rows via mapInPandas.
     Each payload is hashed ONCE; the hex column and the feature vector both

@@ -152,30 +152,6 @@ def test_crossing_deletion_is_sequential():
     assert (0, 5) in spans and (10, 15) in spans
 
 
-def test_nearest_maps_consistent_with_bisect_pairing():
-    """nearest_maps (the W1/W2 full-length map form) and decode_channel's
-    sparse bisect pairing are the same semantics — differential check so a
-    future parity fix to one cannot silently skip the other."""
-    import bisect
-
-    import numpy as np
-
-    from relation_extraction_spark.operators.decode import NEG, POS, nearest_maps
-
-    rng = __import__("random").Random(5)
-    for _ in range(50):
-        seq = 30
-        starts = sorted(rng.sample(range(seq), rng.randint(0, 6)))
-        ends = sorted(rng.sample(range(seq), rng.randint(0, 6)))
-        ps, pe = nearest_maps(np.array(starts, dtype=np.int64),
-                              np.array(ends, dtype=np.int64), seq)
-        for i in range(seq):
-            k = bisect.bisect_right(starts, i) - 1
-            assert ps[i] == (starts[k] if k >= 0 else NEG)
-            j = bisect.bisect_left(ends, i)
-            assert pe[i] == (ends[j] if j < len(ends) else POS)
-
-
 def test_single_point_inverted_dropped():
     """1-start x 1-end with end before start: the forward pass finds no end
     at/after s and the backward no start at/before e — empty either through

@@ -156,7 +156,7 @@ def test_session_stream_matches_batch_sessionize(spark, tmp_path):
     q = start_session_stream(
         spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt"),
         gap="30 minutes", watermark="10 minutes")
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     # append mode emits only watermark-CLOSED sessions; the last batch's
     # sessions are still open when availableNow stops. A later sentinel
     # event in a second pass (same checkpoint → watermark resumes) pushes
@@ -169,7 +169,7 @@ def test_session_stream_matches_batch_sessionize(spark, tmp_path):
     q2 = start_session_stream(
         spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt"),
         gap="30 minutes", watermark="10 minutes")
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     got = sorted(
         (r["user_id"], r["n_events"])
         for r in spark.read.parquet(str(tmp_path / "out")).collect())

@@ -1,11 +1,8 @@
 """J1 entity-occurrence locate tests."""
 
-import pytest
-
 from relation_extraction_spark.operators.locate import (
     all_occurrences,
     locate_doc_entities,
-    locate_entities,
     occurrence_counts_sql_style,
 )
 
@@ -14,17 +11,6 @@ def test_all_occurrences_non_overlapping():
     assert all_occurrences("aaaa", "aa") == [(0, 1), (2, 3)]
     assert all_occurrences("xyx", "q") == []
     assert all_occurrences("金曲3是金曲3", "金曲3") == [(0, 2), (4, 6)]
-
-
-def test_locate_entities_df(spark):
-    docs = spark.createDataFrame(
-        [("u1", "spark and spark again"), ("u2", "no hits here")],
-        "url string, text string")
-    ents = spark.createDataFrame([("spark",)], "entity string")
-    out = {(r["url"]): r for r in locate_entities(docs, ents).collect()}
-    assert out["u1"]["n_occ"] == 2
-    assert [(s["s"], s["e"]) for s in out["u1"]["spans"]] == [(0, 4), (10, 14)]
-    assert out["u2"]["n_occ"] == 0
 
 
 def test_locate_doc_entities_per_doc_lists(spark):
@@ -45,93 +31,16 @@ def test_locate_doc_entities_per_doc_lists(spark):
     assert out[("u2", "ghost")]["n_occ"] == 0
 
 
-def test_locate_entities_vocab_guard(spark):
-    from pyspark.sql import functions as F
-
-    docs = spark.createDataFrame([("u1", "x")], "url string, text string")
-    ents = spark.range(50).select(
-        F.concat(F.lit("e"), F.col("id").cast("string")).alias("entity"))
-    with pytest.raises(ValueError, match="locate_doc_entities"):
-        locate_entities(docs, ents, max_entities=10)
-
-
 def test_counts_agree_with_span_variant(spark):
-    docs = spark.createDataFrame(
-        [(1, "a table on a table by the table"), (2, "tableau")],
-        "doc_id int, text string")
-    ents = spark.createDataFrame([("table",)], "entity string")
-    spans = {r["url"]: r["n_occ"] for r in
-             locate_entities(docs, ents, id_col="doc_id").collect()}
-    counts = {r["doc_id"]: r["n_occ"] for r in
+    """The SQL count (the j1_locate_counts query) equals the number of
+    find-loop spans for every (doc, entity) pair, overlap cases included."""
+    rows = [(1, "a table on a table by the table"), (2, "tableau"),
+            (3, "aaaa"), (4, "")]
+    docs = spark.createDataFrame(rows, "doc_id int, text string")
+    ents = spark.createDataFrame([("table",), ("aa",), ("tab",)], "entity string")
+    counts = {(r["doc_id"], r["entity"]): r["n_occ"] for r in
               occurrence_counts_sql_style(docs, ents).collect()}
-    assert spans == {"1": 3, "2": 1} and counts == {1: 3, 2: 1}
-
-
-def test_aho_corasick_differential_vs_find_loop():
-    """AhoCorasick.spans_non_overlapping must equal the per-pattern find
-    loop (all_occurrences) on every (text, pattern) pair — overlapping
-    matches, nested/prefix/suffix patterns, CJK, singles."""
-    import random
-
-    from relation_extraction_spark.operators.locate import AhoCorasick
-
-    patterns = ["aa", "aaa", "ab", "b", "金曲3", "曲", "aba", "", "xyz"]
-    rng = random.Random(7)
-    texts = ["aaaa", "ababab", "金曲3是金曲3曲", ""] + [
-        "".join(rng.choice("ab金曲3是x") for _ in range(60)) for _ in range(40)]
-    ac = AhoCorasick(patterns)
-    for text in texts:
-        got = ac.spans_non_overlapping(text)
-        for pid, p in enumerate(patterns):
-            assert got.get(pid, []) == all_occurrences(text, p), (text, p)
-
-
-def test_locate_entities_50k_vocab_single_pass(spark):
-    """Round-4 VERDICT 'weak' fix: a 50k-entity vocabulary must be a single
-    automaton pass per document (seconds end-to-end), not 50k str.find scans
-    per document. Correctness cross-checked against the find loop for the
-    entities that actually occur."""
-    import time
-
-    vocab = [f"ent{i:05d}x" for i in range(50_000)]
-    docs_rows = [
-        (f"u{d}", " ".join(f"ent{(d * 97 + k) % 50_000:05d}x" for k in range(20)))
-        for d in range(100)]
-    docs = spark.createDataFrame(docs_rows, "url string, text string")
-    ents = spark.createDataFrame([(v,) for v in vocab], "entity string")
-    t0 = time.monotonic()
-    out = locate_entities(docs, ents)
-    hits = out.where("n_occ > 0").collect()
-    elapsed = time.monotonic() - t0
-    assert elapsed < 120, f"50k-vocab locate took {elapsed:.0f}s"
-    got = {(r["url"], r["entity"]): [(s["s"], s["e"]) for s in r["spans"]]
-           for r in hits}
-    text_by_url = dict(docs_rows)
-    assert len(got) == 100 * 20  # every planted entity found, nothing else
-    for (url, ent), spans in list(got.items())[:200]:
-        assert spans == all_occurrences(text_by_url[url], ent)
-
-
-def test_automaton_cache_lru_two_slots():
-    """Two ALTERNATING vocabularies in one worker must both stay cached
-    (round-5 judge finding: single-slot clear() rebuilt the automaton on
-    every alternation); a third evicts the least-recently-used."""
-    from relation_extraction_spark.operators import locate as loc
-
-    class FakeBc:
-        def __init__(self, words):
-            self.value = words
-
-    loc._AC_CACHE.clear()
-    a1 = loc._cached_automaton("tok-a", FakeBc(["金曲"]))
-    b1 = loc._cached_automaton("tok-b", FakeBc(["神作"]))
-    # alternating lookups hit the same objects — no rebuild
-    assert loc._cached_automaton("tok-a", FakeBc(["金曲"])) is a1
-    assert loc._cached_automaton("tok-b", FakeBc(["神作"])) is b1
-    assert loc._cached_automaton("tok-a", FakeBc(["金曲"])) is a1
-    # a third vocabulary evicts the LRU entry (tok-b), keeps tok-a
-    loc._cached_automaton("tok-c", FakeBc(["李明"]))
-    assert len(loc._AC_CACHE) == 2
-    assert "tok-a" in loc._AC_CACHE and "tok-c" in loc._AC_CACHE
-    assert loc._cached_automaton("tok-a", FakeBc(["金曲"])) is a1
-    loc._AC_CACHE.clear()
+    want = {(d, e): len(all_occurrences(text, e))
+            for d, text in rows for e in ("table", "aa", "tab")}
+    assert counts == want
+    assert counts[(1, "table")] == 3 and counts[(3, "aa")] == 2

@@ -197,27 +197,6 @@ def test_extract_text_p_wrap_byte_identity(text):
     assert extract_text_bytes(html) == text
 
 
-AC_ALPHA = "ab金曲"
-AC_PATTERNS = st.lists(
-    st.text(alphabet=st.sampled_from(list(AC_ALPHA)), min_size=1, max_size=4),
-    min_size=1, max_size=8, unique=True)
-AC_TEXT = st.text(alphabet=st.sampled_from(list(AC_ALPHA)), max_size=60)
-
-
-@given(AC_PATTERNS, AC_TEXT)
-@settings(max_examples=300, deadline=None)
-def test_aho_corasick_equals_find_loop(patterns, text):
-    """Random small-alphabet pattern sets maximize overlap/nesting (the
-    hard cases for fail links): spans_non_overlapping must equal the
-    reference find-loop restart semantics for every pattern."""
-    from relation_extraction_spark.operators.locate import AhoCorasick, all_occurrences
-
-    ac = AhoCorasick(patterns)
-    got = ac.spans_non_overlapping(text)
-    for pid, p in enumerate(patterns):
-        assert got.get(pid, []) == all_occurrences(text, p), (text, p)
-
-
 WARC_URL = st.from_regex(r"https://[a-z]{1,8}\.example/[a-z0-9]{0,6}",
                          fullmatch=True)
 WARC_HTML = st.binary(max_size=120)

@@ -5,7 +5,6 @@ import json
 import os
 
 import pyspark.sql.functions as F
-import pytest
 
 from relation_extraction_spark.operators.ensemble import EnsembleScorer
 from relation_extraction_spark.operators.scorer import SurrogateScorer
@@ -128,7 +127,7 @@ def test_streaming_foreachbatch(spark, tmp_path):
     in_dir, out_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
     documents_df(spark, 60).write.mode("overwrite").parquet(in_dir)
     q = start_extraction_stream(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = spark.read.parquet(out_dir)
     n = got.count()
     assert n > 0
@@ -170,34 +169,15 @@ def test_stateful_dedup_stream(spark, tmp_path):
     # duplicate delivery: same urls again as a second file batch
     docs.write.mode("append").parquet(in_dir)
     q = start_dedup_stream(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     got = spark.read.parquet(out_dir)
     assert got.count() == 30
     assert got.select("url").distinct().count() == 30
     # restart with one more duplicate delivery: state says already-seen
     docs.write.mode("append").parquet(in_dir)
     q2 = start_dedup_stream(spark, in_dir, out_dir, ckpt)
-    q2.awaitTermination(180)
+    assert q2.awaitTermination(180)
     assert spark.read.parquet(out_dir).count() == 30
-
-
-def test_stateful_dedup_stream_with_ttl(spark, tmp_path):
-    """TTL mode (bounded state store): dedup semantics hold within the TTL
-    window — duplicate deliveries inside it still collapse to first-seen,
-    and the timeout code path (set / re-arm) runs end-to-end."""
-    from relation_extraction_spark.streaming.stream import start_dedup_stream
-    from relation_extraction_spark.synthetic import documents_df
-
-    in_dir, out_dir, ckpt = (str(tmp_path / "in"), str(tmp_path / "out"),
-                             str(tmp_path / "ck"))
-    docs = documents_df(spark, 20)
-    docs.write.mode("overwrite").parquet(in_dir)
-    docs.write.mode("append").parquet(in_dir)  # duplicate delivery
-    q = start_dedup_stream(spark, in_dir, out_dir, ckpt, state_ttl_minutes=60)
-    q.awaitTermination(180)
-    got = spark.read.parquet(out_dir)
-    assert got.count() == 20
-    assert got.select("url").distinct().count() == 20
 
 
 def test_first_seen_dedup_batch_map_columns(spark):
@@ -238,7 +218,7 @@ def test_windowed_stream_with_watermark(spark, tmp_path):
     spark.createDataFrame(rows([0, 1, 2], 5, "click"), schema) \
         .coalesce(1).write.mode("overwrite").parquet(in_dir)
     q = start_windowed_counts_stream(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     got1 = {(r["win_start"].hour, r["event_type"]) for r in
             spark.read.parquet(out_dir).collect()}
     assert (0, "click") in got1 and (2, "click") not in got1
@@ -249,7 +229,7 @@ def test_windowed_stream_with_watermark(spark, tmp_path):
     spark.createDataFrame(rows([10], 5, "view") + late, schema) \
         .coalesce(1).write.mode("append").parquet(in_dir)
     q2 = start_windowed_counts_stream(spark, in_dir, out_dir, ckpt)
-    q2.awaitTermination(180)
+    assert q2.awaitTermination(180)
     got = {(r["win_start"].hour, r["event_type"]): r["n"]
            for r in spark.read.parquet(out_dir).collect()}
     assert got.get((0, "click")) == 5 and got.get((1, "click")) == 5
@@ -810,7 +790,7 @@ def test_frontier_stream_discovers_each_url_once(spark, tmp_path):
     docs.write.mode("overwrite").parquet(in_dir)
     docs.write.mode("append").parquet(in_dir)  # re-crawl: duplicate delivery
     q = start_frontier_stream(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     got = spark.read.parquet(out_dir)
     want = (extract_links(docs, canonicalize=True)
             .select("dst").distinct())
@@ -821,100 +801,21 @@ def test_frontier_stream_discovers_each_url_once(spark, tmp_path):
     # restart with another duplicate delivery: state says already-discovered
     docs.write.mode("append").parquet(in_dir)
     q2 = start_frontier_stream(spark, in_dir, out_dir, ckpt)
-    q2.awaitTermination(180)
+    assert q2.awaitTermination(180)
     assert spark.read.parquet(out_dir).count() == n_want
-
-
-def test_frontier_stream_ttl_bounds_state(spark, tmp_path):
-    """Round-6 verdict ask #3: with the sliding TTL wired into the frontier
-    stream, state size plateaus instead of growing with every url ever
-    discovered. Phases (same checkpoint, availableNow restarts):
-    1. X discovered (duplicate delivery in the SAME window emits once —
-       exactly-once preserved under TTL);
-    2. after the TTL passes, a batch carrying only Z fires X's timeout
-       callback and evicts it (Z discovered);
-    3. X re-delivered → re-enters the frontier (proof the state was
-       evicted, i.e. the store tracks the recent set, not history), while
-       Z — whose state is alive and re-armed by its own data — stays
-       deduped across the restart."""
-    import datetime as dt
-    import time
-
-    from relation_extraction_spark.streaming.stream import start_frontier_stream
-
-    def doc(src, dst, ts):
-        html = f'<a href="https://{dst}.example/x">A</a>'.encode()
-        return (f"https://{src}.example/p",
-                dt.datetime(2026, 4, 1, 0, 0, ts), html, None, None)
-
-    schema = ("url string, warc_ts timestamp, html binary, "
-              "text string, lang string")
-    in_dir, out_dir, ckpt = (str(tmp_path / "in"), str(tmp_path / "out"),
-                             str(tmp_path / "ck"))
-    # TTL must separate the two timing regimes: X's idle gap (the
-    # deliberate 50 s sleep) exceeds it, while the back-to-back phase-2→3
-    # restart stays well inside it so Z's state is provably alive. A
-    # millisecond TTL made Z's survival a race (an availableNow run may
-    # process a trailing timeout batch and evict it).
-    ttl_min = 45 / 60
-
-    def run(expected_rows):
-        # ProcessingTimeTimeout keeps an availableNow query alive with
-        # timeout-service batches after the data drains — awaitTermination
-        # (and even processAllAvailable) never returns, and a leftover
-        # query racing the next phase's on one checkpoint corrupts state
-        # commits. Each phase is bounded explicitly instead: poll the sink
-        # until this phase's output lands (data and its timeout evictions
-        # commit in the same batch), then stop the query.
-        q = start_frontier_stream(spark, in_dir, out_dir, ckpt,
-                                  state_ttl_minutes=ttl_min)
-        try:
-            deadline = time.time() + 150
-            while time.time() < deadline:
-                try:
-                    if spark.read.parquet(out_dir).count() >= expected_rows:
-                        break
-                except Exception:
-                    pass  # sink dir not created yet
-                time.sleep(1)
-        finally:
-            q.stop()
-            q.awaitTermination(60)
-
-    # phase 1: X delivered twice in one window → exactly one frontier row
-    spark.createDataFrame([doc("s1", "x", 1), doc("s2", "x", 2)],
-                          schema).write.mode("append").parquet(in_dir)
-    run(1)
-    assert spark.read.parquet(out_dir).count() == 1
-
-    # phase 2: TTL elapsed; a Z-only batch fires X's timeout → eviction
-    time.sleep(50)
-    spark.createDataFrame([doc("s3", "z", 3)], schema) \
-        .write.mode("append").parquet(in_dir)
-    run(2)
-    assert spark.read.parquet(out_dir).count() == 2
-
-    # phase 3: X re-enters (evicted state), Z stays deduped (live state)
-    spark.createDataFrame([doc("s4", "x", 4), doc("s5", "z", 5)],
-                          schema).write.mode("append").parquet(in_dir)
-    run(3)
-    got = spark.read.parquet(out_dir)
-    counts = {r["dst"]: r["n"] for r in
-              got.groupBy("dst").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert counts == {"https://x.example/x": 2, "https://z.example/x": 1}
 
 
 def test_kg_merge_stream_exactly_once(spark, tmp_path):
     """Continuous KG maintenance: two triple batches land and fold into the
-    catalog table across a stream RESTART (same checkpoint); the final
-    snapshot equals the batch-sequential merge_delta, a functional-
-    predicate conflict is adjudicated, and a simulated at-least-once
-    replay of an already-folded batch is a no-op (no new snapshot, same
-    contents)."""
+    catalog table across a stream RESTART (same checkpoint); the live view
+    equals the batch-sequential merge_delta, a functional-predicate conflict
+    is adjudicated, and a simulated at-least-once replay of an already-folded
+    batch is a no-op (no new delta or snapshot, same contents)."""
     from relation_extraction_spark.plans.catalog import Catalog
     from relation_extraction_spark.streaming.stream import (
         TRIPLES_STREAM_SCHEMA,
-        fold_triples_batch,
+        fold_triples_batch_mor,
+        read_merged_table,
         start_kg_merge_stream,
     )
 
@@ -929,13 +830,15 @@ def test_kg_merge_stream_exactly_once(spark, tmp_path):
     b2 = [("https://c.com/1", "甲", "国籍", "法国", 20),   # weaker claim
           ("https://d.com/1", "乙", "主演", "戏2", 21)]
 
+    def live():
+        return {(r["subject"], r["predicate"], r["object"]):
+                (r["status"], r["n_refs"])
+                for r in read_merged_table(spark, croot).collect()}
+
     spark.createDataFrame(b1, TRIPLES_STREAM_SCHEMA) \
         .write.mode("append").parquet(land)
-    start_kg_merge_stream(spark, land, croot, ckpt).awaitTermination(120)
-    cat = Catalog(spark, croot)
-    t1 = {(r["subject"], r["predicate"], r["object"]):
-          (r["status"], r["n_refs"])
-          for r in cat.read("kg_edges").collect()}
+    assert start_kg_merge_stream(spark, land, croot, ckpt).awaitTermination(120)
+    t1 = live()
     # the very first batch already adjudicates its functional conflict
     assert t1 == {("甲", "国籍", "中国"): ("added", 2),
                   ("甲", "国籍", "泰国"): ("retracted", 1),
@@ -943,10 +846,8 @@ def test_kg_merge_stream_exactly_once(spark, tmp_path):
 
     spark.createDataFrame(b2, TRIPLES_STREAM_SCHEMA) \
         .write.mode("append").parquet(land)
-    start_kg_merge_stream(spark, land, croot, ckpt).awaitTermination(120)
-    t2 = {(r["subject"], r["predicate"], r["object"]):
-          (r["status"], r["n_refs"])
-          for r in cat.read("kg_edges").collect()}
+    assert start_kg_merge_stream(spark, land, croot, ckpt).awaitTermination(120)
+    t2 = live()
     assert t2 == {("甲", "国籍", "中国"): ("carried", 2),
                   ("甲", "国籍", "泰国"): ("retracted", 1),
                   ("甲", "国籍", "法国"): ("retracted", 1),
@@ -955,14 +856,14 @@ def test_kg_merge_stream_exactly_once(spark, tmp_path):
 
     # at-least-once replay: re-folding batch 1 after batch 2 is committed
     # must be a no-op BEFORE any write
-    before = cat.snapshots("kg_edges")
+    cat = Catalog(spark, croot)
+    before = (cat.committed_delta_ids("kg_edges"), cat.snapshots("kg_edges"))
+    assert before == ([0, 1], [])  # two deltas, below compact_every
     replay = spark.createDataFrame(b1, TRIPLES_STREAM_SCHEMA)
-    assert fold_triples_batch(replay, 0, croot) is False
-    assert cat.snapshots("kg_edges") == before
-    t3 = {(r["subject"], r["predicate"], r["object"]):
-          (r["status"], r["n_refs"])
-          for r in cat.read("kg_edges").collect()}
-    assert t3 == t2
+    assert fold_triples_batch_mor(replay, 0, croot) is False
+    assert (cat.committed_delta_ids("kg_edges"),
+            cat.snapshots("kg_edges")) == before
+    assert live() == t2
 
 
 def test_warc_chunk_boundary_inside_record_separator():
@@ -997,10 +898,14 @@ def test_warc_chunk_boundary_inside_record_separator():
 
 
 def test_kg_merge_stream_merge_on_read_mode(spark, tmp_path):
-    """start_kg_merge_stream(merge_on_read=True): batches land as delta
-    files (O(|batch|) folds), the read view matches the copy-on-write
-    stream on the same batches across a restart, replayed landings stay
-    no-ops, and compaction (compact_every=2) materialized a snapshot."""
+    """start_kg_merge_stream: batches land as delta files (O(|batch|)
+    folds), the read view matches sequential merge_delta folds of the same
+    batches across a restart, replayed landings stay no-ops, and compaction
+    (compact_every=2) materialized a snapshot."""
+    from relation_extraction_spark.operators.kg_delta import (
+        merge_delta,
+        triple_provenance,
+    )
     from relation_extraction_spark.plans.catalog import Catalog
     from relation_extraction_spark.streaming.stream import (
         TRIPLES_STREAM_SCHEMA,
@@ -1009,8 +914,7 @@ def test_kg_merge_stream_merge_on_read_mode(spark, tmp_path):
     )
 
     land = str(tmp_path / "landing")
-    mor_root, cow_root = str(tmp_path / "mor"), str(tmp_path / "cow")
-    ck_m, ck_c = str(tmp_path / "ckm"), str(tmp_path / "ckc")
+    mor_root, ck_m = str(tmp_path / "mor"), str(tmp_path / "ckm")
 
     b1 = [("https://a.com/1", "甲", "国籍", "中国", 10),
           ("https://e.com/1", "甲", "国籍", "泰国", 12),
@@ -1022,23 +926,21 @@ def test_kg_merge_stream_merge_on_read_mode(spark, tmp_path):
                 "first_seen", "last_seen", "status"]
         return sorted(map(tuple, df.select(*cols).collect()))
 
+    ref = None
     for batch in (b1, b2):
-        spark.createDataFrame(batch, TRIPLES_STREAM_SCHEMA) \
-            .write.mode("append").parquet(land)
-        start_kg_merge_stream(spark, land, mor_root, ck_m,
-                              merge_on_read=True,
-                              compact_every=2).awaitTermination(120)
-        start_kg_merge_stream(spark, land, cow_root, ck_c) \
-            .awaitTermination(120)
-        assert canon(read_merged_table(spark, mor_root)) == canon(
-            Catalog(spark, cow_root).read("kg_edges")
-            .drop("_applied_batch"))
+        df = spark.createDataFrame(batch, TRIPLES_STREAM_SCHEMA)
+        df.write.mode("append").parquet(land)
+        assert start_kg_merge_stream(spark, land, mor_root, ck_m,
+                                     compact_every=2).awaitTermination(120)
+        prov = triple_provenance(df, seen_col="ts")
+        ref = merge_delta(prov.limit(0) if ref is None else ref, prov)
+        assert canon(read_merged_table(spark, mor_root)) == canon(ref)
     # both batches folded and compacted into one snapshot, no deltas left
     cat = Catalog(spark, mor_root)
     assert cat.exists("kg_edges")
     assert cat.committed_delta_ids("kg_edges") == []
     # a replayed landing (restart with no new files) changes nothing
     before = canon(read_merged_table(spark, mor_root))
-    start_kg_merge_stream(spark, land, mor_root, ck_m, merge_on_read=True,
-                          compact_every=2).awaitTermination(120)
+    assert start_kg_merge_stream(spark, land, mor_root, ck_m,
+                                 compact_every=2).awaitTermination(120)
     assert canon(read_merged_table(spark, mor_root)) == before
